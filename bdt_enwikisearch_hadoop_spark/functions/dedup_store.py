@@ -33,19 +33,15 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..sources import rebalance
 from .index_store import (
-    apply_tombstones_in_compaction,
-    assert_batch_not_tombstoned,
+    SegmentedStore,
     assert_manifest_consistent,
     assert_sidecar_populated,
     build_write_lease,
     clear_tombstones,
-    compact_store,
-    record_tombstones,
-    refresh_store,
     reset_manifest,
-    stamp_manifest,
-    store_write_lease,
-    table_buckets as _table_buckets,
+    segmented_append,
+    segmented_compact,
+    segmented_delete,
     tombstones_df,
     write_store_meta,
 )
@@ -108,36 +104,27 @@ def build_dedup_index(spark, sf_dir: str, table: str, path: str,
         reset_manifest(spark, table, spark.table(f"{table}_sets").count())
 
 
+def _dedup_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A batch's (band rows, shingle-set rows) — the two tables one
+    append writes."""
+    sets = shingle_sets(rebalance(docs))
+    return _text_band_table(sets), sets
+
+
+#: The near-dup store's lane constants: band rows bucketed by ``bk``,
+#: ids and shingle sets in ``{table}_sets``.
+DEDUP_STORE = SegmentedStore(
+    id_col="doc_id", id_suffix="_sets", bucket_col="bk", rows=_dedup_rows,
+)
+
+
 def compact_dedup_index(spark, table: str, new_path: str) -> None:
     """One-file-per-bucket rewrite of an append-accumulated dedup store
     (immutable swap to ``new_path`` — see index_store.compact_store).
     Reads the persisted band/shingle rows; the corpus is never
-    re-signed.  Refuses a store whose sidecar is missing — compaction
-    would otherwise rewrite the corruption into a fresh-looking store
-    with new meta sidecars; runs under the single-writer lease (a
-    compactor IS a writer), anchored at BOTH the current and the new
-    base so the mid-swap repoint can't let a second writer in."""
-    with store_write_lease(spark, table, extra_paths=(new_path,)):
-        assert_sidecar_populated(spark, table, "_sets",
-                                 "compact_dedup_index", use_memo=False)
-        assert_manifest_consistent(spark, table, "_sets",
-                                   "compact_dedup_index", use_memo=False)
-        # a deleting compaction: every part anti-joins the tombstoned
-        # doc_ids during its rewrite, then the tombstone table retires
-        # and the manifest records the negative delta
-        tombs = tombstones_df(spark, table)
-        transforms = None
-        if tombs is not None:
-            minus = lambda df: df.join(  # noqa: E731
-                tombs.select("doc_id"), "doc_id", "left_anti"
-            )
-            transforms = {"": minus, "_sets": minus}
-        compact_store(spark, table, new_path,
-                      [("", "bk"), ("_sets", "doc_id")],
-                      transforms=transforms)
-        if tombs is not None:
-            apply_tombstones_in_compaction(spark, table, "_sets",
-                                           new_path)
+    re-signed.  Protocol: :func:`index_store.segmented_compact`."""
+    segmented_compact(spark, DEDUP_STORE, table, new_path,
+                      "compact_dedup_index")
 
 
 def append_dedup_index(spark, table: str, docs: DataFrame,
@@ -148,62 +135,18 @@ def append_dedup_index(spark, table: str, docs: DataFrame,
     j84 decides a daily shard against the corpus without rescanning it,
     and this makes the index itself roll forward at batch-sized cost
     (sign ONLY the batch, two bucketed appends) instead of a rebuild.
-    Appended files land in the same bucket layout (the writer's spec
-    must match the table's or Spark refuses), so probe-time bucket
-    pruning keeps working across build ∪ append; probe-equivalence
-    with a full rebuild is pinned by
+    Probe-equivalence with a full rebuild is pinned by
     test_append_dedup_index_equals_rebuild.
 
     The batch is signed twice (once per table write) — batch-sized
     work, and keeping the two writer plans independent beats a
-    checkpoint for shards that fit the daily-ingest budget.
-
-    IDEMPOTENT on replayed ids: intra-batch duplicate doc_ids collapse
-    to one arbitrary representative FIRST (the anti-join only removes
-    ids already IN THE SIDECAR, so a dirty shard carrying the same
-    doc_id twice would otherwise double-index it — two sidecar rows,
-    two probe result rows), then already-indexed doc_ids are
-    anti-joined out against the shingle sidecar (batch-sized work —
-    the sidecar side is doc_id-bucketed, read in place), so
-    re-ingesting a shard never double-indexes a document (which would
-    duplicate probe result rows — probe_dedup's candidate list is
-    distinct but the sidecar join is not).
-
-    SINGLE-WRITER: the refresh→anti-join→write→stamp sequence runs
-    under :func:`index_store.store_write_lease` (a second live
-    appender refuses by name; crashed holders are taken over after
-    ``lease_stale_sec``), and the ingest manifest is cross-checked
-    before the writes and stamped with the shard's NEW id count after
-    them (:func:`index_store.assert_manifest_consistent`)."""
-    nb = _table_buckets(spark, table)
-    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
-        refresh_store(spark, table, ("", "_sets"))
-        assert_sidecar_populated(spark, table, "_sets",
-                                 "append_dedup_index", use_memo=False)
-        assert_manifest_consistent(spark, table, "_sets",
-                                   "append_dedup_index", use_memo=False)
-        existing = spark.table(f"{table}_sets").select("doc_id")
-        docs = docs.dropDuplicates(["doc_id"])
-        # BEFORE the idempotence anti-join: a tombstoned id is still
-        # physically in the sidecar, so the anti-join would silently
-        # swallow it instead of surfacing the refusal
-        assert_batch_not_tombstoned(spark, table, "doc_id", docs,
-                                    "append_dedup_index")
-        docs = docs.join(existing, "doc_id", "left_anti")
-        sets = shingle_sets(rebalance(docs))
-        band = _text_band_table(sets)
-        band.write.mode("append").bucketBy(nb, "bk").sortBy(
-            "bk"
-        ).saveAsTable(table)
-        sets.write.mode("append").bucketBy(nb, "doc_id").sortBy(
-            "doc_id"
-        ).saveAsTable(f"{table}_sets")
-        # refresh before the stamp count: a foreachBatch clone's writes
-        # are invisible to this session's cached file listing
-        spark.sql(f"REFRESH TABLE {table}_sets")
-        stamp_manifest(
-            spark, table, spark.table(f"{table}_sets").count(), shard_id
-        )
+    checkpoint for shards that fit the daily-ingest budget.  A replayed
+    document would duplicate probe result rows (probe_dedup's candidate
+    list is distinct but the sidecar join is not), which the lane's
+    sidecar anti-join prevents.  Protocol (idempotence, single writer,
+    manifest, crash windows): :func:`index_store.segmented_append`."""
+    segmented_append(spark, DEDUP_STORE, table, docs, shard_id,
+                     lease_stale_sec, "append_dedup_index")
 
 
 def delete_from_dedup_index(spark, table: str, ids,
@@ -216,20 +159,10 @@ def delete_from_dedup_index(spark, table: str, ids,
     id REFUSE (compaction frees it), and the next
     ``compact_dedup_index`` removes the rows physically and retires
     the tombstones.  ``ids`` is an iterable of doc_ids or a DataFrame
-    with a ``doc_id`` column; returns the reconciliation counts
-    (requested / deleted / already_deleted / not_indexed).  Runs under
-    the single-writer lease with the store guards — a deleter is a
-    writer."""
-    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
-        refresh_store(spark, table, ("", "_sets"))
-        assert_sidecar_populated(spark, table, "_sets",
-                                 "delete_from_dedup_index",
-                                 use_memo=False)
-        assert_manifest_consistent(spark, table, "_sets",
-                                   "delete_from_dedup_index",
-                                   use_memo=False)
-        return record_tombstones(spark, table, "_sets", "doc_id", ids,
-                                 "delete_from_dedup_index")
+    with a ``doc_id`` column.  Protocol:
+    :func:`index_store.segmented_delete`."""
+    return segmented_delete(spark, DEDUP_STORE, table, ids,
+                            lease_stale_sec, "delete_from_dedup_index")
 
 
 def shard_dedup_decisions(spark, table: str, docs: DataFrame,

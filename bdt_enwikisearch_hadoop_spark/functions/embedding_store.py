@@ -52,19 +52,15 @@ from .ann import (
     embedding_bucket_table,
 )
 from .index_store import (
-    apply_tombstones_in_compaction,
-    assert_batch_not_tombstoned,
+    SegmentedStore,
     assert_manifest_consistent,
     assert_sidecar_populated,
     build_write_lease,
     clear_tombstones,
-    compact_store,
-    record_tombstones,
-    refresh_store,
     reset_manifest,
-    stamp_manifest,
-    store_write_lease,
-    table_buckets as _table_buckets,
+    segmented_append,
+    segmented_compact,
+    segmented_delete,
     tombstones_df,
     write_store_meta,
 )
@@ -183,6 +179,18 @@ def build_embedding_index(spark, sf_dir: str, table: str, path: str,
         reset_manifest(spark, table, spark.table(f"{table}_vecs").count())
 
 
+#: The embedding store's lane constants: band rows bucketed by
+#: ``bucket``, ids + vectors in ``{table}_vecs``; every batch passes the
+#: ingest gate before anything is written.
+EMBEDDING_STORE = SegmentedStore(
+    id_col="vec_id",
+    id_suffix="_vecs",
+    bucket_col="bucket",
+    rows=lambda emb: (embedding_band_buckets(emb), _vec_sidecar(emb)),
+    check=_assert_ingestable,
+)
+
+
 def append_embedding_index(spark, table: str, emb: DataFrame,
                            shard_id: str | None = None,
                            lease_stale_sec: float = 3600.0) -> None:
@@ -191,93 +199,23 @@ def append_embedding_index(spark, table: str, emb: DataFrame,
     signs ONLY the batch (one zero-shuffle fold pass per write) and the
     corpus tables roll forward without a rebuild.  Probe-equivalence
     with a full rebuild is pinned by
-    test_append_embedding_index_equals_rebuild.
-
-    IDEMPOTENT on replayed ids: intra-batch duplicate vec_ids collapse
-    to one arbitrary representative FIRST (the anti-join only removes
-    ids already IN THE SIDECAR, so a dirty shard carrying the same
-    vec_id twice would otherwise double-index it — two sidecar rows,
-    two probe result rows), then already-indexed vec_ids are
-    anti-joined out against the vector sidecar (batch-sized work — the
-    sidecar side is vec_id-bucketed, read in place), so re-ingesting a
-    shard never double-indexes a vector (which would duplicate probe
-    result rows).
-
-    SINGLE-WRITER: the refresh→anti-join→write→stamp sequence runs
-    under :func:`index_store.store_write_lease` (a second live
-    appender refuses by name; crashed holders taken over after
-    ``lease_stale_sec``), and the ingest manifest is cross-checked
-    before the writes and stamped with the shard's NEW id count after
-    them (:func:`index_store.assert_manifest_consistent`)."""
-    nb = _table_buckets(spark, table)
-    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
-        refresh_store(spark, table, ("", "_vecs"))
-        assert_sidecar_populated(spark, table, "_vecs",
-                                 "append_embedding_index", use_memo=False)
-        assert_manifest_consistent(spark, table, "_vecs",
-                                   "append_embedding_index",
-                                   use_memo=False)
-        _assert_ingestable(emb, "append_embedding_index")
-        existing = spark.table(f"{table}_vecs").select("vec_id")
-        emb = emb.dropDuplicates(["vec_id"])
-        # BEFORE the idempotence anti-join: a tombstoned id is still
-        # physically in the sidecar, so the anti-join would silently
-        # swallow it instead of surfacing the refusal
-        assert_batch_not_tombstoned(spark, table, "vec_id", emb,
-                                    "append_embedding_index")
-        emb = emb.join(existing, "vec_id", "left_anti")
-        band = embedding_band_buckets(emb)
-        band.write.mode("append").bucketBy(nb, "bucket").sortBy(
-            "bucket"
-        ).saveAsTable(table)
-        _vec_sidecar(emb).write.mode("append").bucketBy(nb, "vec_id").sortBy(
-            "vec_id"
-        ).saveAsTable(f"{table}_vecs")
-        # refresh before the stamp count: a foreachBatch clone's writes
-        # are invisible to this session's cached file listing
-        spark.sql(f"REFRESH TABLE {table}_vecs")
-        stamp_manifest(
-            spark, table, spark.table(f"{table}_vecs").count(), shard_id
-        )
+    test_append_embedding_index_equals_rebuild.  The batch passes
+    :func:`_assert_ingestable` before any write; a replayed vector
+    would duplicate probe result rows, which the lane's sidecar
+    anti-join prevents.  Protocol (idempotence, single writer,
+    manifest, crash windows): :func:`index_store.segmented_append`."""
+    segmented_append(spark, EMBEDDING_STORE, table, emb, shard_id,
+                     lease_stale_sec, "append_embedding_index")
 
 
 def compact_embedding_index(spark, table: str, new_path: str) -> None:
     """One-file-per-bucket rewrite of an append-accumulated embedding
     store (immutable swap to ``new_path`` — see
     index_store.compact_store).  Reads the persisted band/vector rows;
-    nothing is re-signed.  Refuses a store whose sidecar is missing —
-    compaction would otherwise rewrite the corruption into a
-    fresh-looking store with new meta sidecars; runs under the
-    single-writer lease (a compactor IS a writer), anchored at BOTH
-    the current and the new base so the mid-swap repoint can't let a
-    second writer in."""
-    with store_write_lease(spark, table, extra_paths=(new_path,)):
-        assert_sidecar_populated(
-            spark, table, "_vecs", "compact_embedding_index",
-            use_memo=False
-        )
-        assert_manifest_consistent(
-            spark, table, "_vecs", "compact_embedding_index",
-            use_memo=False
-        )
-        # a deleting compaction: every part anti-joins the tombstoned
-        # vec_ids during its rewrite, then the tombstone table retires
-        # and the manifest records the negative delta
-        tombs = tombstones_df(spark, table)
-        transforms = None
-        if tombs is not None:
-            minus = lambda df: df.join(  # noqa: E731
-                tombs.select("vec_id"), "vec_id", "left_anti"
-            )
-            transforms = {"": minus, "_vecs": minus}
-        compact_store(
-            spark, table, new_path,
-            [("", "bucket"), ("_vecs", "vec_id")],
-            transforms=transforms,
-        )
-        if tombs is not None:
-            apply_tombstones_in_compaction(spark, table, "_vecs",
-                                           new_path)
+    nothing is re-signed.  Protocol:
+    :func:`index_store.segmented_compact`."""
+    segmented_compact(spark, EMBEDDING_STORE, table, new_path,
+                      "compact_embedding_index")
 
 
 def delete_from_embedding_index(spark, table: str, ids,
@@ -289,20 +227,10 @@ def delete_from_embedding_index(spark, table: str, ids,
     the next call on, appends of a tombstoned id REFUSE (compaction
     frees it), and the next ``compact_embedding_index`` removes the
     rows physically and retires the tombstones.  ``ids`` is an
-    iterable of vec_ids or a DataFrame with a ``vec_id`` column;
-    returns the reconciliation counts (requested / deleted /
-    already_deleted / not_indexed).  Runs under the single-writer
-    lease with the store guards — a deleter is a writer."""
-    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
-        refresh_store(spark, table, ("", "_vecs"))
-        assert_sidecar_populated(spark, table, "_vecs",
-                                 "delete_from_embedding_index",
-                                 use_memo=False)
-        assert_manifest_consistent(spark, table, "_vecs",
-                                   "delete_from_embedding_index",
-                                   use_memo=False)
-        return record_tombstones(spark, table, "_vecs", "vec_id", ids,
-                                 "delete_from_embedding_index")
+    iterable of vec_ids or a DataFrame with a ``vec_id`` column.
+    Protocol: :func:`index_store.segmented_delete`."""
+    return segmented_delete(spark, EMBEDDING_STORE, table, ids,
+                            lease_stale_sec, "delete_from_embedding_index")
 
 
 def shard_embedding_decisions(spark, table: str, emb: DataFrame,

@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -249,8 +250,7 @@ def compact_store(spark, table: str, new_path: str,
     :func:`vacuum_store`) — i.e. snapshot isolation, not an error.
     ``parts`` lists the store's (suffix, bucket_col) pairs, e.g.
     dedup: ``[("", "bk"), ("_sets", "doc_id")]``; embedding:
-    ``[("", "bucket"), ("_vecs", "vec_id")]``; postings:
-    ``[("", "term"), ("_norms", "doc_id")]``.  Bucket counts and meta
+    ``[("", "bucket"), ("_vecs", "vec_id")]``.  Bucket counts and meta
     sidecars carry over, so registered consumers keep their pruned
     plans.
 
@@ -899,9 +899,9 @@ def append_superseded(new_path: str, dirs: list[str]) -> None:
 
 def apply_tombstones_in_compaction(spark, table: str, id_suffix: str,
                                    new_path: str) -> None:
-    """The post-swap half of a deleting compaction, shared by the
-    three store wrappers: retire the tombstone table (drop the catalog
-    entry, ledger its directory for :func:`vacuum_store` — other
+    """The post-swap half of a deleting compaction
+    (:func:`segmented_compact`): retire the tombstone table (drop the
+    catalog entry, ledger its directory for :func:`vacuum_store` — other
     sessions' registrations keep reading it, where the anti-join of
     already-physically-removed ids is a no-op: snapshot isolation),
     and stamp the ingest manifest with the NEGATIVE delta the physical
@@ -941,16 +941,9 @@ def delete_from_tf_index(spark, table: str, ids,
     rebuild over the surviving corpus — pinned by
     test_tf_delete_serves_exact_rebuild_parity.  Physical reclamation
     and freeing the ids for re-ingest happen at the next
-    :func:`compact_tf_index`.  Runs under the single-writer lease with
-    the store guards (a deleter is a writer)."""
-    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
-        refresh_store(spark, table, ("", "_docs"))
-        assert_sidecar_populated(spark, table, "_docs",
-                                 "delete_from_tf_index", use_memo=False)
-        assert_manifest_consistent(spark, table, "_docs",
-                                   "delete_from_tf_index", use_memo=False)
-        return record_tombstones(spark, table, "_docs", "doc_id", ids,
-                                 "delete_from_tf_index")
+    :func:`compact_tf_index`.  Protocol: :func:`segmented_delete`."""
+    return segmented_delete(spark, TF_STORE, table, ids, lease_stale_sec,
+                            "delete_from_tf_index")
 
 
 # ---------------------------------------------------------------------------
@@ -1476,6 +1469,184 @@ def check_store(spark, table: str, id_suffix: str) -> dict:
     return out
 
 
+# ---------------------------------------------------------------------------
+# segmented-store lifecycle — one append, one compaction, one delete lane
+# ---------------------------------------------------------------------------
+#
+# The raw-TF, near-dup (dedup_store) and embedding (embedding_store)
+# stores are each a main table bucketed by its lookup key plus an id
+# sidecar bucketed by id; each supplies a SegmentedStore constant and
+# shares the three lanes below.
+
+
+class SegmentedStore(NamedTuple):
+    """What differs between the segmented stores, as per-store
+    constants (never caller options):
+
+    * ``id_col`` / ``id_suffix`` — the id column and the id sidecar
+      ``{table}{id_suffix}`` (bucketed by ``id_col``);
+    * ``bucket_col`` — the main table's bucket column;
+    * ``rows`` — deduped, anti-joined batch → (main-table rows, sidecar
+      rows), the two row sets one append writes;
+    * ``check`` — an optional ``(batch, what)`` refusal gate run on the
+      raw batch before anything is written;
+    * ``folds`` — optional suffix → ``(part, tombstones or None)``
+      rewrites for parts whose compaction FOLDS rows instead of copying
+      them; a fold applies the tombstones itself."""
+
+    id_col: str
+    id_suffix: str
+    bucket_col: str
+    rows: Callable[[DataFrame], tuple[DataFrame, DataFrame]]
+    check: Callable[[DataFrame, str], None] | None = None
+    folds: dict | None = None
+
+
+def drop_tombstoned(df: DataFrame, tombs: DataFrame | None,
+                    id_col: str) -> DataFrame:
+    """``df`` minus its tombstoned ids; ``df`` itself when the store has
+    no tombstones, so a store that never saw a delete keeps its plan."""
+    if tombs is None:
+        return df
+    return df.join(tombs.select(id_col), id_col, "left_anti")
+
+
+def compaction_transforms(store: SegmentedStore,
+                          tombs: DataFrame | None) -> dict:
+    """The per-part rewrites :func:`segmented_compact` hands to
+    :func:`compact_store`: each part's fold when the store declares
+    one, else the tombstone anti-join when tombstones exist, else
+    nothing (a row-preserving copy)."""
+    folds = store.folds or {}
+    out = {}
+    for suffix in ("", store.id_suffix):
+        if suffix in folds:
+            out[suffix] = lambda df, f=folds[suffix]: f(df, tombs)
+        elif tombs is not None:
+            out[suffix] = lambda df: drop_tombstoned(df, tombs, store.id_col)
+    return out
+
+
+def segmented_append(spark, store: SegmentedStore, table: str,
+                     batch: DataFrame, shard_id: str | None,
+                     lease_stale_sec: float, what: str) -> None:
+    """The one append lane of every segmented store: write a NEW batch
+    as one more segment of the main table plus its ids into the id
+    sidecar, at batch-sized cost.  Nothing rewrites the base; appended
+    files land in the tables' existing bucket layout (the writer's
+    spec must match the table's or Spark refuses), so lookups stay
+    bucket-pruned across build ∪ append.
+
+    IDEMPOTENT on replayed ids: intra-batch duplicate ids collapse to
+    one arbitrary representative FIRST (the anti-join only removes ids
+    already in the sidecar, so an id occurring twice in one shard would
+    otherwise be indexed twice and land twice in the sidecar), then
+    ids already in the sidecar are anti-joined out (batch-sized work —
+    the sidecar is id-bucketed, read in place), so re-ingesting a shard
+    never double-indexes.  A TOMBSTONED id refuses before that
+    anti-join (:func:`assert_batch_not_tombstoned`).
+
+    SINGLE-WRITER: the whole refresh→anti-join→write→stamp sequence
+    runs under :func:`store_write_lease` — a second live appender
+    refuses with the holder's name instead of interleaving (crashed
+    holders are taken over after ``lease_stale_sec``).  The sidecar
+    guard and the ingest manifest are checked BEFORE the writes
+    (refusing to append into a store that already lost data), and the
+    manifest is stamped with this shard's NEW id count after them.
+
+    Crash windows: the main-table rows write FIRST and the sidecar
+    second — a crash between the two re-appends the segment on replay
+    (the sidecar never saw its ids), which each store's serve path
+    absorbs; a crash between the sidecar write and the stamp leaves
+    actual > manifest, which every lane refuses by name until
+    ``repair-manifest`` adopts it."""
+    nb = table_buckets(spark, table)
+    ids = f"{table}{store.id_suffix}"
+    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
+        refresh_store(spark, table, ("", store.id_suffix))
+        assert_sidecar_populated(spark, table, store.id_suffix, what,
+                                 use_memo=False)
+        assert_manifest_consistent(spark, table, store.id_suffix, what,
+                                   use_memo=False)
+        if store.check is not None:
+            store.check(batch, what)
+        existing = spark.table(ids).select(store.id_col)
+        batch = batch.dropDuplicates([store.id_col])
+        # BEFORE the idempotence anti-join: a tombstoned id is still
+        # physically in the sidecar, so the anti-join would silently
+        # swallow it instead of surfacing the refusal
+        assert_batch_not_tombstoned(spark, table, store.id_col, batch, what)
+        main, side = store.rows(batch.join(existing, store.id_col,
+                                           "left_anti"))
+        (
+            main.write.mode("append")
+            .bucketBy(nb, store.bucket_col).sortBy(store.bucket_col)
+            .saveAsTable(table)
+        )
+        (
+            side.write.mode("append")
+            .bucketBy(nb, store.id_col).sortBy(store.id_col)
+            .saveAsTable(ids)
+        )
+        # the stamp's count must SEE the writes just made: when the
+        # batch frame belongs to a cloned session (foreachBatch), the
+        # writes land via that clone and this session's cached file
+        # listing is stale — refresh before counting or the manifest
+        # under-records the shard and the NEXT append refuses
+        spark.sql(f"REFRESH TABLE {ids}")
+        stamp_manifest(spark, table, spark.table(ids).count(), shard_id)
+
+
+def segmented_compact(spark, store: SegmentedStore, table: str,
+                      new_path: str, what: str) -> None:
+    """The one compaction lane: :func:`compact_store`'s one-file-per-
+    bucket immutable swap to ``new_path`` with the store's
+    :func:`compaction_transforms`.  Reads the persisted rows; the
+    corpus is never re-derived.  Refuses a store whose sidecar is
+    missing or whose ingest manifest diverges — compaction would
+    otherwise rewrite the corruption into a fresh-looking store with
+    new meta sidecars.  Runs under the single-writer lease (a compactor
+    IS a writer), anchored at BOTH the current and the new base so the
+    mid-swap repoint can't let a second writer in.  A DELETING
+    compaction (tombstones exist) drops the tombstoned ids from every
+    part during the rewrite, then retires the tombstone table and
+    stamps the negative delta (:func:`apply_tombstones_in_compaction`)."""
+    with store_write_lease(spark, table, extra_paths=(new_path,)):
+        assert_sidecar_populated(spark, table, store.id_suffix, what,
+                                 use_memo=False)
+        assert_manifest_consistent(spark, table, store.id_suffix, what,
+                                   use_memo=False)
+        tombs = tombstones_df(spark, table)
+        compact_store(
+            spark, table, new_path,
+            [("", store.bucket_col), (store.id_suffix, store.id_col)],
+            transforms=compaction_transforms(store, tombs),
+        )
+        if tombs is not None:
+            apply_tombstones_in_compaction(spark, table, store.id_suffix,
+                                           new_path)
+
+
+def segmented_delete(spark, store: SegmentedStore, table: str, ids,
+                     lease_stale_sec: float, what: str) -> dict:
+    """The one delete lane: tombstone ``ids`` (an iterable of ids or a
+    DataFrame with the store's id column) under the single-writer lease
+    with the store guards — a deleter is a writer, and tombstoning ids
+    against a store that already lost data would mask the loss.  Serve
+    paths exclude the ids from the next call on, appends of them
+    refuse, and the next compaction removes their rows physically.
+    Returns :func:`record_tombstones`' reconciliation counts
+    (requested / deleted / already_deleted / not_indexed)."""
+    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
+        refresh_store(spark, table, ("", store.id_suffix))
+        assert_sidecar_populated(spark, table, store.id_suffix, what,
+                                 use_memo=False)
+        assert_manifest_consistent(spark, table, store.id_suffix, what,
+                                   use_memo=False)
+        return record_tombstones(spark, table, store.id_suffix,
+                                 store.id_col, ids, what)
+
+
 def build_index(spark, sf_dir: str, table: str, path: str, buckets: int = 16) -> None:
     """Compute TF-IDF postings from the corpus and persist them as a
     parquet table bucketed+sorted by term, PLUS the per-document
@@ -1668,18 +1839,77 @@ def build_tf_index(
         _N_DOCS_MEMO.pop((spark.sparkContext.applicationId, table), None)
 
 
+def posting_rows(index: DataFrame,
+                 tombs: DataFrame | None = None) -> DataFrame:
+    """(term, doc_id, tf) — one row per (term, doc_id) of a segmented
+    index's postings, tombstoned doc_ids dropped when tombstones exist.
+    Per-(term, doc_id) ``max(tf)`` collapses the duplicates segments
+    can carry (a replayed segment after a crash, or a replay with a
+    conflicting tf for an already-ingested doc), so df derived from
+    these rows never double-counts a document.  The serve path
+    (:func:`search_tf_index`) and the compaction fold
+    (:func:`fold_postings`) both read postings through it."""
+    posts = (
+        index.select("term", F.explode("postings").alias("p"))
+        .select(
+            "term",
+            F.col("p.doc_id").alias("doc_id"),
+            F.col("p.tf").alias("tf"),
+        )
+    )
+    posts = drop_tombstoned(posts, tombs, "doc_id")
+    return posts.groupBy("term", "doc_id").agg(F.max("tf").alias("tf"))
+
+
+def fold_postings(index: DataFrame,
+                  tombs: DataFrame | None = None) -> DataFrame:
+    """Segments → ONE (term, df_count, postings) row per term:
+    :func:`posting_rows` re-collected, df_count = size(postings).
+    Linear in postings (explode + hash aggregate); a term whose
+    postings all died with the tombstones disappears with its group."""
+    return (
+        posting_rows(index, tombs)
+        .groupBy("term")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("doc_id", "tf"))
+            ).alias("postings")
+        )
+        .select(
+            "term",
+            F.size("postings").cast("bigint").alias("df_count"),
+            "postings",
+        )
+    )
+
+
+#: The raw-TF store's lane constants: postings bucketed by term, ids in
+#: ``{table}_docs``; compaction folds the segments per term and reduces
+#: ``_docs`` to distinct ids.
+TF_STORE = SegmentedStore(
+    id_col="doc_id",
+    id_suffix="_docs",
+    bucket_col="term",
+    rows=lambda docs: (_tf_segment(docs), docs.select("doc_id")),
+    folds={
+        "": fold_postings,
+        "_docs": lambda df, tombs: drop_tombstoned(
+            df.distinct(), tombs, "doc_id"
+        ),
+    },
+)
+
+
 def merge_tf_delta(spark, base_table: str, delta_docs: DataFrame) -> DataFrame:
     """The merged index plan: base postings full-outer-joined with the
     delta corpus's TF aggregate on term; postings concatenate (disjoint
     doc_ids), df counts add.  Returns the DataFrame — callers persist
     it as a new bucketed table (immutable swap, module docstring)."""
     base = spark.table(base_table)
-    tf = term_freq(tokenize(delta_docs))
-    delta = tf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("d_df"),
-        F.array_sort(
-            F.collect_list(F.struct(F.col("doc_id"), F.col("tf")))
-        ).alias("d_postings"),
+    delta = _tf_segment(delta_docs).select(
+        "term",
+        F.col("df_count").alias("d_df"),
+        F.col("postings").alias("d_postings"),
     )
     empty = F.array().cast("array<struct<doc_id:bigint,tf:bigint>>")
     return (
@@ -1708,67 +1938,17 @@ def append_tf_index(spark, table: str, docs: DataFrame,
     term that appears in several batches owns several (term, df_count,
     postings) rows, and the serving path (:func:`search_tf_index`)
     folds segments at query time over just the |Q| looked-up terms.
-    Nothing rewrites the base; appended files land in the same
-    term-bucket layout so lookups stay bucket-pruned across
-    build ∪ append.
 
-    IDEMPOTENT on replayed ids: intra-batch duplicate doc_ids collapse
-    to one arbitrary representative FIRST (the anti-join only removes
-    ids already in the sidecar, so a doc_id occurring twice in one
-    shard would otherwise double its tf in the segment and land twice
-    in the sidecar), then already-ingested doc_ids are
-    anti-joined out against the ``_docs`` sidecar (batch-sized work —
-    the sidecar is doc_id-bucketed).  The segment rows write FIRST and
-    the sidecar second (dedup_store's ordering): a crash between the
-    two re-appends the segment on replay, and the serving path
-    collapses such duplicates by construction (per-(term, doc_id)
-    ``max(tf)``; df derived from the deduped postings, never from the
-    stored counters).  Between the crash and the replay the orphan
-    segment's docs count toward df but not N — scores are mildly
-    deflated until the shard is replayed, never NULL or doubled.
-
-    SINGLE-WRITER: the whole refresh→anti-join→write→stamp sequence
-    runs under :func:`store_write_lease` — a second live appender
-    refuses with the holder's name instead of interleaving (crashed
-    holders are taken over after ``lease_stale_sec``).  The ingest
-    manifest is cross-checked BEFORE the writes (refusing to append
-    into a store that already lost data) and stamped with this
-    shard's NEW id count after them — a crash between the sidecar
-    write and the stamp leaves actual > manifest, which every lane
-    refuses by name until ``repair-manifest`` adopts it."""
-    nb = table_buckets(spark, table)
-    with store_write_lease(spark, table, stale_sec=lease_stale_sec):
-        refresh_store(spark, table, ("", "_docs"))
-        assert_sidecar_populated(spark, table, "_docs", "append_tf_index",
-                                 use_memo=False)
-        assert_manifest_consistent(spark, table, "_docs",
-                                   "append_tf_index", use_memo=False)
-        existing = spark.table(f"{table}_docs").select("doc_id")
-        docs = docs.dropDuplicates(["doc_id"])
-        # BEFORE the idempotence anti-join: a tombstoned id is still
-        # physically in _docs, so the anti-join would silently swallow
-        # it instead of surfacing the refusal
-        assert_batch_not_tombstoned(spark, table, "doc_id", docs,
-                                    "append_tf_index")
-        docs = docs.join(existing, "doc_id", "left_anti")
-        (
-            _tf_segment(docs).write.mode("append")
-            .bucketBy(nb, "term").sortBy("term").saveAsTable(table)
-        )
-        (
-            docs.select("doc_id").write.mode("append")
-            .bucketBy(nb, "doc_id").sortBy("doc_id")
-            .saveAsTable(f"{table}_docs")
-        )
-        # the stamp's count must SEE the writes just made: when the
-        # batch frame belongs to a cloned session (foreachBatch), the
-        # writes land via that clone and this session's cached file
-        # listing is stale — refresh before counting or the manifest
-        # under-records the shard and the NEXT append refuses
-        spark.sql(f"REFRESH TABLE {table}_docs")
-        stamp_manifest(
-            spark, table, spark.table(f"{table}_docs").count(), shard_id
-        )
+    Protocol (idempotence, single writer, manifest, crash windows):
+    :func:`segmented_append`.  A crash between the segment write and
+    the ``_docs`` write re-appends the segment on replay; serving
+    collapses such duplicates by construction (:func:`posting_rows`;
+    df derived from the deduped postings, never from the stored
+    counters).  Between the crash and the replay the orphan segment's
+    docs count toward df but not N — scores are mildly deflated until
+    the shard is replayed, never NULL or doubled."""
+    segmented_append(spark, TF_STORE, table, docs, shard_id,
+                     lease_stale_sec, "append_tf_index")
     _N_DOCS_MEMO.pop((spark.sparkContext.applicationId, table), None)
 
 
@@ -1838,20 +2018,11 @@ def search_tf_index(
             f"{table}_docs is empty while {table} has postings — was "
             "the store registered without its _docs sidecar?"
         )
-    idx = spark.table(table).filter(F.col("term").isin(*terms))
-    posts = (
-        idx.select("term", F.explode("postings").alias("p"))
-        .select(
-            "term",
-            F.col("p.doc_id").alias("doc_id"),
-            F.col("p.tf").alias("tf"),
-        )
-        .groupBy("term", "doc_id")
-        .agg(F.max("tf").alias("tf"))
-    )
     tombs = tombstones_df(spark, table)
+    posts = posting_rows(
+        spark.table(table).filter(F.col("term").isin(*terms)), tombs
+    )
     if tombs is not None:
-        posts = posts.join(tombs.select("doc_id"), "doc_id", "left_anti")
         n_docs -= n_tombstones(spark, table)
     dfc = posts.groupBy("term").agg(F.count(F.lit(1)).alias("dfc"))
     scored = (
@@ -1880,92 +2051,14 @@ def search_tf_index(
 
 
 def compact_tf_index(spark, table: str, new_path: str) -> None:
-    """Fold the accumulated segments back to ONE row per term (df
-    recounted from the deduped merged postings — replay duplicates
-    disappear here too) and the ``_docs`` sidecar to distinct ids,
-    while rewriting to one file per bucket — compact_store's immutable
-    swap with the segmented store's merge transforms.  Refuses a store
-    whose ``_docs`` sidecar is missing or whose ingest manifest
-    diverges — compaction would otherwise rewrite the corruption into
-    a fresh-looking store; runs under the single-writer lease (a
-    compactor IS a writer), anchored at BOTH the current and the new
-    base so the mid-swap repoint can't let a second writer in."""
-    with store_write_lease(spark, table, extra_paths=(new_path,)):
-        assert_sidecar_populated(spark, table, "_docs",
-                                 "compact_tf_index", use_memo=False)
-        assert_manifest_consistent(spark, table, "_docs",
-                                   "compact_tf_index", use_memo=False)
-        _compact_tf_locked(spark, table, new_path)
+    """Fold the accumulated segments back to ONE row per term
+    (:func:`fold_postings` — the serve path's own per-(term, doc_id)
+    max(tf) collapse, so replay duplicates disappear here too and
+    df_count is recounted from the merged postings) and the ``_docs``
+    sidecar to distinct ids, while rewriting to one file per bucket.
+    Protocol (guards, lease, tombstones): :func:`segmented_compact`."""
+    segmented_compact(spark, TF_STORE, table, new_path, "compact_tf_index")
     _N_DOCS_MEMO.pop((spark.sparkContext.applicationId, table), None)
-
-
-def _compact_tf_locked(spark, table: str, new_path: str) -> None:
-    def _merge_terms(df: DataFrame) -> DataFrame:
-        merged = F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("postings")))
-        )
-        return (
-            df.groupBy("term")
-            .agg(merged.alias("postings"))
-            .select(
-                "term",
-                F.size("postings").cast("bigint").alias("df_count"),
-                "postings",
-            )
-        )
-
-    tombs = tombstones_df(spark, table)
-
-    def _merge_terms_minus(df: DataFrame) -> DataFrame:
-        # the deleting variant folds via explode → anti-join →
-        # re-collect (an array lambda cannot express "not in that
-        # table"); per-(term, doc_id) max(tf) is the serve path's own
-        # replay-duplicate collapse, and a term whose postings all
-        # died disappears with its group
-        posts = (
-            df.select("term", F.explode("postings").alias("p"))
-            .select(
-                "term",
-                F.col("p.doc_id").alias("doc_id"),
-                F.col("p.tf").alias("tf"),
-            )
-            .join(tombs.select("doc_id"), "doc_id", "left_anti")
-            .groupBy("term", "doc_id")
-            .agg(F.max("tf").alias("tf"))
-        )
-        return (
-            posts.groupBy("term")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("doc_id", "tf"))
-                ).alias("postings")
-            )
-            .select(
-                "term",
-                F.size("postings").cast("bigint").alias("df_count"),
-                "postings",
-            )
-        )
-
-    if tombs is None:
-        transforms = {
-            "": _merge_terms,
-            "_docs": lambda df: df.distinct(),
-        }
-    else:
-        transforms = {
-            "": _merge_terms_minus,
-            "_docs": lambda df: df.distinct().join(
-                tombs.select("doc_id"), "doc_id", "left_anti"
-            ),
-        }
-    compact_store(
-        spark, table, new_path,
-        [("", "term"), ("_docs", "doc_id")],
-        transforms=transforms,
-    )
-    if tombs is not None:
-        apply_tombstones_in_compaction(spark, table, "_docs", new_path)
 
 
 def _merged_index_df(spark, sf_dir: str) -> DataFrame:

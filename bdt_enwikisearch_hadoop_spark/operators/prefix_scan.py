@@ -150,8 +150,9 @@ def aligned_bucket(
 ) -> Column:
     """An order-aligned bucket id for a NUMERIC leading sort column:
     ``approx_percentile`` boundary sketch over a seeded sample → per-
-    row count of boundaries strictly below the key (an O(|buckets|)
-    vectorized fold — no UDF).  Every boundary placement yields correct
+    row count of boundaries strictly below the key (a balanced
+    binary-search WHEN tree, ~log2(|buckets|) comparisons per row — no
+    UDF; :func:`_bucket_of`).  Every boundary placement yields correct
     scan results; the sketch only balances bucket sizes, so neither its
     accuracy knob nor the sampling error is a correctness input.
     Constant keys degenerate to one bucket — exactly what any range
@@ -189,7 +190,16 @@ def _bucket_of(col: Column, bounds: list) -> Column:
     600k-row ntile (round 16).  NULL keys: ``col > bound`` is NULL, so
     every WHEN falls through to its left branch and a NULL lands in
     bucket 0 — identical to the filter form (NULL predicate rows were
-    dropped, size 0) and exactly where nulls-first ordering needs it."""
+    dropped, size 0) and exactly where nulls-first ordering needs it.
+
+    ``bounds`` must be strictly increasing: the tree's binary search
+    equals the count only over sorted, duplicate-free boundaries, so
+    anything else raises ``ValueError`` instead of mis-bucketing."""
+    if any(not a < b for a, b in zip(bounds, bounds[1:])):
+        raise ValueError(
+            f"_bucket_of: bounds must be sorted and duplicate-free, got "
+            f"{bounds!r}"
+        )
 
     def tree(lo: int, hi: int) -> Column:
         # bucket id within [lo, hi], searching bounds[lo:hi]

@@ -1571,6 +1571,103 @@ def test_search_tf_index_one_exchange_bucket_pruned(spark, sf_dir,
         spark.sql("DROP TABLE IF EXISTS t_plan_stf_tombs")
 
 
+def _struct_array_distincts(df) -> list[str]:
+    """Every ``ArrayDistinct`` over an array of STRUCTS in ``df``'s
+    optimized plan — Spark compares struct elements pairwise there, so
+    such a fold is quadratic in the array's length (a head term's
+    postings)."""
+    found = []
+    plans, exprs = [df._jdf.queryExecution().optimizedPlan()], []
+    while plans or exprs:
+        if plans:
+            node = plans.pop()
+            it = node.expressions().iterator()
+            while it.hasNext():
+                exprs.append(it.next())
+            it = node.children().iterator()
+            while it.hasNext():
+                plans.append(it.next())
+            continue
+        e = exprs.pop()
+        if (e.getClass().getSimpleName() == "ArrayDistinct"
+                and e.dataType().elementType().typeName() == "struct"):
+            found.append(e.toString())
+        it = e.children().iterator()
+        while it.hasNext():
+            exprs.append(it.next())
+    return found
+
+
+def test_store_writers_fold_postings_linearly(spark, sf_dir, tmp_path):
+    """Plan lint over every segmented-store WRITER: the compaction part
+    transforms of the three stores (with and without tombstones),
+    ``_tf_segment`` and ``merge_tf_delta`` carry no ``ArrayDistinct``
+    over a struct-typed array — the quadratic postings fold the
+    explode → per-(term, doc_id) max(tf) → collect_list fold replaced.
+    The TF compaction fold also rides the store's term bucketing: a
+    bucketed scan and ZERO exchanges."""
+    from pyspark.sql import functions as F
+
+    from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
+        DEDUP_STORE,
+        build_dedup_index,
+    )
+    from bdt_enwikisearch_hadoop_spark.functions.embedding_store import (
+        EMBEDDING_STORE,
+        build_embedding_index,
+    )
+    from bdt_enwikisearch_hadoop_spark.functions.index_store import (
+        TF_STORE,
+        _tf_segment,
+        build_tf_index,
+        compaction_transforms,
+        merge_tf_delta,
+    )
+    from bdt_enwikisearch_hadoop_spark.sources import load
+
+    docs = load(spark, sf_dir, "documents")
+    stores = (
+        ("t_lint_tf", TF_STORE),
+        ("t_lint_dd", DEDUP_STORE),
+        ("t_lint_emb", EMBEDDING_STORE),
+    )
+    try:
+        build_tf_index(spark, docs, "t_lint_tf", str(tmp_path / "tf"))
+        build_dedup_index(spark, sf_dir, "t_lint_dd", str(tmp_path / "dd"),
+                          docs=docs)
+        build_embedding_index(spark, sf_dir, "t_lint_emb",
+                              str(tmp_path / "emb"),
+                              emb=load(spark, sf_dir, "embeddings"))
+        # the detector is live: the retired fold's spelling trips it
+        old = spark.table("t_lint_tf").groupBy("term").agg(F.array_distinct(
+            F.flatten(F.collect_list("postings"))).alias("postings"))
+        assert _struct_array_distincts(old), "lint detector is vacuous"
+
+        writers = {
+            "_tf_segment": _tf_segment(docs),
+            "merge_tf_delta": merge_tf_delta(spark, "t_lint_tf", docs),
+        }
+        for table, store in stores:
+            tombs = spark.createDataFrame([(1,)], f"{store.id_col} long")
+            for t in (None, tombs):
+                for suffix, f in compaction_transforms(store, t).items():
+                    writers[f"{table}{suffix} tombs={t is not None}"] = f(
+                        spark.table(f"{table}{suffix}"))
+        assert "t_lint_tf tombs=False" in writers
+        for name, df in writers.items():
+            assert not _struct_array_distincts(df), name
+
+        fold = compaction_transforms(TF_STORE, None)[""](
+            spark.table("t_lint_tf"))
+        p = fold._jdf.queryExecution().executedPlan().toString()
+        assert "Bucketed: true" in p, p
+        assert "Exchange" not in p, p
+    finally:
+        for t in ("t_lint_tf", "t_lint_tf_docs", "t_lint_dd", "t_lint_dd_sets",
+                  "t_lint_emb", "t_lint_emb_vecs"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_prefix_scan_keys_partition_the_corpus_window(spark, sf_dir):
     """The three keys rebuilt on operators/prefix_scan.py (d22 NTILE,
     j65 running weight, j71 per-epoch rank) must keep the two-phase

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import Window, functions as F
 
 from bdt_enwikisearch_hadoop_spark.operators.prefix_scan import (
+    _bucket_of,
     aligned_bucket,
     global_ntile,
     global_row_number,
@@ -363,3 +364,40 @@ def test_sketch_memoized_second_construction_adds_zero_jobs(spark, sf_dir):
         second = QUERIES[key](spark, sf_dir)
         assert n_jobs() == before, key
         assert first.schema == second.schema, key
+
+
+@pytest.mark.parametrize("n_bounds", [1, 2, 7, 63])
+def test_bucket_of_when_tree_equals_filter_count(spark, n_bounds):
+    """``_bucket_of``'s binary-search WHEN tree must equal the form it
+    replaced, ``size(filter(array(bounds), b -> col > b))`` — the count
+    of bounds strictly below the key — for random doubles, every exact
+    boundary value and its neighbours, ±inf, NaN and NULL keys."""
+    rnd = random.Random(n_bounds)
+    bounds = sorted({round(rnd.uniform(-100, 100), 2)
+                     for _ in range(n_bounds)})
+    while len(bounds) < n_bounds:
+        bounds = sorted(set(bounds) | {round(rnd.uniform(-100, 100), 2)})
+    xs = [rnd.uniform(-150, 150) for _ in range(300)]
+    for b in bounds:
+        xs += [b, b - 1e-9, b + 1e-9]
+    xs += [float("inf"), float("-inf"), float("nan"), None, None]
+    t = spark.createDataFrame([(x,) for x in xs], "x double")
+    old = F.size(F.filter(
+        F.array(*[F.lit(b) for b in bounds]), lambda b: F.col("x") > b
+    ))
+    got = t.select(
+        "x",
+        _bucket_of(F.col("x"), bounds).alias("tree"),
+        old.alias("filt"),
+    )
+    bad = got.filter(F.col("tree") != F.col("filt")).collect()
+    assert not bad, bad[:5]
+    assert got.filter(F.col("tree").isNull()).count() == 0
+
+
+@pytest.mark.parametrize("bounds", [[2.0, 1.0], [1.0, 1.0], [0.0, 3.0, 3.0]])
+def test_bucket_of_refuses_unsorted_or_duplicate_bounds(spark, bounds):
+    """The binary search only counts correctly over strictly increasing
+    bounds — anything else must raise, not mis-bucket silently."""
+    with pytest.raises(ValueError, match="sorted and duplicate-free"):
+        _bucket_of(F.col("x"), bounds)

@@ -5567,6 +5567,25 @@ def test_tf_segment_index_serves_current_weights(spark, sf_dir, tmp_path):
         assert rows(q) == rows(search_index(spark, "t_seg_w", QUERY_TERMS))
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert "SelectedBucketsCount" in plan, plan
+        # ... and a replayed segment carrying a CONFLICTING (lower) tf
+        # for already-ingested doc_ids — a producer that re-sent a
+        # document with different text: max(tf) keeps the ingested tf
+        (
+            _tf_segment(delta)
+            .withColumn("postings", F.filter(
+                F.transform("postings", lambda p: F.struct(
+                    p["doc_id"].alias("doc_id"), (p["tf"] - 1).alias("tf"))),
+                lambda p: p["tf"] > 0,
+            ))
+            .filter(F.size("postings") > 0)
+            .write.mode("append")
+            .bucketBy(nb, "term").sortBy("term").saveAsTable("t_seg_tf")
+        )
+        pre_compact = {
+            conj: rows(search_tf_index(spark, "t_seg_tf", QUERY_TERMS,
+                                       conjunctive=conj))
+            for conj in (True, False)
+        }
 
         # compaction folds segments (incl. the duplicate) to ONE row
         # per term, identical service
@@ -5578,6 +5597,14 @@ def test_tf_segment_index_serves_current_weights(spark, sf_dir, tmp_path):
         assert idx.filter(
             F.col("df_count") != F.size("postings")
         ).count() == 0
+        # every (term, doc_id) once: the conflicting tf folded away
+        # instead of riding along as a second posting of the same doc
+        assert idx.select(
+            "term", F.explode("postings.doc_id").alias("doc_id")
+        ).groupBy("term", "doc_id").count().filter("count > 1").count() == 0
+        for conj, want in pre_compact.items():
+            assert rows(search_tf_index(
+                spark, "t_seg_tf", QUERY_TERMS, conjunctive=conj)) == want
         assert rows(search_tf_index(spark, "t_seg_tf", QUERY_TERMS)) == rows(
             search_index(spark, "t_seg_w", QUERY_TERMS)
         )
