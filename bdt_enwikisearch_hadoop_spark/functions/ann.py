@@ -892,13 +892,6 @@ def _duck_seq_dot(a: str, b: str) -> str:
     )
 
 
-def _duck_seq_cos(a: str, b: str) -> str:
-    return (
-        f"{_duck_seq_dot(a, b)} / (SQRT({_duck_seq_dot(a, a)})"
-        f" * SQRT({_duck_seq_dot(b, b)}))"
-    )
-
-
 def _j78_ctes() -> str:
     """The shared j78/j79/j80 CTE chain over the full embeddings table:
     signature (+ per-vector norm, computed ONCE) → per-(band, bucket)

@@ -3,19 +3,26 @@ build-once/serve-many artifact (index_store.py's postings pattern
 applied to j8's MinHash-LSH pipeline, completing j84's incremental
 story): an ingestion service asks "is this document a near-duplicate
 of anything already ingested?" by banding ONLY the probe text
-(pure-Python, driver-side — one document, no job) and reading the
-probe's |bands| bucket rows from the persisted band index, then
-exact-verifying the handful of candidates against the persisted
-shingle-set sidecar.  The corpus is never rescanned per probe.
+(pure-Python, driver-side — one document, no job), reading the probe's
+|bands| bucket files of the persisted band index in place, and
+exact-verifying the handful of candidates against their shingle-set
+sidecar rows.  A probe starts no Spark job and never rescans the
+corpus (:func:`probe_dedup`).
 
 Two tables per index:
 
 * ``{table}``       — (b, bk, doc_id) band-bucket rows, bucketed +
-  sorted by bk so a probe's bucket lookup is a pushed-filter read of
-  one bucket file per band instead of a scan;
+  sorted by bk, so a probe's lookup opens one bucket file per band
+  (per append segment until compaction) instead of scanning;
 * ``{table}_sets``  — (doc_id, s) the distinct-shingle arrays for the
   exact-Jaccard verify (the same persisted sidecar the batch pipeline
-  writes — j21's store discipline on the text side).
+  writes — j21's store discipline on the text side), bucketed by
+  doc_id so the verify opens only its candidates' bucket files.
+
+The in-place reads depend on Spark's bucket layout: bucket
+``pmod(Murmur3_x86_32(key, seed 42), nb)`` in files named
+``…_{bucket:05d}.c000….parquet`` (index_store's in-place bucket reads;
+a property test fails loudly if that layout changes).
 
 Cross-engine derivation contract: the probe's Python banding MUST be
 bit-identical to the corpus-side Spark banding (same lowercase /
@@ -33,11 +40,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..sources import rebalance
 from .index_store import (
+    _TOMBS_SUFFIX,
     SegmentedStore,
     assert_manifest_consistent,
     assert_sidecar_populated,
     build_write_lease,
     clear_tombstones,
+    read_by_key,
     reset_manifest,
     segmented_append,
     segmented_compact,
@@ -142,7 +151,7 @@ def append_dedup_index(spark, table: str, docs: DataFrame,
     work, and keeping the two writer plans independent beats a
     checkpoint for shards that fit the daily-ingest budget.  A replayed
     document would duplicate probe result rows (probe_dedup's candidate
-    list is distinct but the sidecar join is not), which the lane's
+    set is distinct but its sidecar read is not), which the lane's
     sidecar anti-join prevents.  Protocol (idempotence, single writer,
     manifest, crash windows): :func:`index_store.segmented_append`."""
     segmented_append(spark, DEDUP_STORE, table, docs, shard_id,
@@ -308,19 +317,24 @@ def probe_dedup(spark, table: str, text: str,
     Jaccard with ``text`` is ≥ theta, candidates drawn ONLY from the
     probe's band buckets — the j8 contract served online.
 
-    Plan: the band-index read carries a ``bk IN (probe's bucket
-    keys)`` conjunct — the shape Spark's bucket-pruning extractor
-    recognizes, so the scan opens ONLY the probe's bucket files
-    ("SelectedBucketsCount: |bands| out of n" in the plan; the exact
-    (b, bk) disjunction alone defeats the extractor and scanned all
-    buckets) — plus the (b, bk) disjunction as the exact residual
-    filter.  The candidate doc_ids then key a join into the
-    shingle-set sidecar; the verify is one in-row array_intersect
-    against the probe's shingle-array literal.  A probe that is too
-    short to shingle, or whose buckets are all empty, returns an empty
-    DataFrame — never an error.  A store whose _sets SIDECAR went
-    missing, however, raises: every probe would otherwise answer
-    'no duplicate' silently (assert_sidecar_populated).
+    Plan: no Spark job.  The probe is banded in Python; the band
+    index's ``bk`` bucket files that hold the probe's |bands| keys are
+    read in place with pyarrow (:func:`index_store.read_by_key`) and
+    the exact (b, bk) matches are the candidates; tombstoned ids are
+    dropped (read from the tombstone table's own files); the
+    candidates' ``_sets`` rows are read from their ``doc_id`` bucket
+    files the same way and verified in Python.  The answer is returned
+    as a DataFrame built from an Arrow table (``doc_id bigint, jaccard
+    double``; a local relation, so collecting it starts no job either).
+    A probe's work is the occupancy of its own band keys: the files of
+    |bands| buckets plus the candidates' sidecar buckets, never the
+    corpus.  Each part's location is resolved at call time, so a probe
+    sees other sessions' committed appends without ``refresh_store``
+    and reads a complete directory during a compaction's repoint.  A
+    probe that is too short to shingle, or whose buckets are all
+    empty, returns an empty DataFrame — never an error.  A store whose
+    _sets SIDECAR went missing, however, raises: every probe would
+    otherwise answer 'no duplicate' silently (assert_sidecar_populated).
 
     Threshold contract: keep/drop applies to the EXACT (unrounded)
     Jaccard — the same ``j >= theta`` cut j8's batch pipeline declares —
@@ -329,35 +343,35 @@ def probe_dedup(spark, table: str, text: str,
     boundary (a pair at true J = 0.79996 is dropped and would have
     shown as 0.79996, not a rounded 0.8; pinned by the boundary-J
     fixture in tests/test_properties.py)."""
+    import pyarrow as pa
+
     sh = probe_shingles(text)
-    idx = spark.table(table)
-    if not sh:
-        # too short to shingle: empty result, no store access needed
-        return (
-            idx.select("doc_id").limit(0)
-            .withColumn("jaccard", F.lit(0.0))
-        )
-    assert_sidecar_populated(spark, table, "_sets", "probe_dedup")
-    assert_manifest_consistent(spark, table, "_sets", "probe_dedup")
-    bands = probe_bands(sh)
-    hit = None
-    for b, bk in bands:
-        c = (F.col("b") == b) & (F.col("bk") == bk)
-        hit = c if hit is None else (hit | c)
-    prune = F.col("bk").isin(*[bk for _, bk in bands])
-    cand = idx.filter(prune & hit).select("doc_id").distinct()
-    tombs = tombstones_df(spark, table)
-    if tombs is not None:
-        # deleted documents never surface as near-dups (the candidate
-        # set is probe-small, so the anti-join is serve-cheap)
-        cand = cand.join(tombs.select("doc_id"), "doc_id", "left_anti")
-    sets = spark.table(f"{table}_sets").join(cand, "doc_id")
-    probe_arr = F.array(*[F.lit(s) for s in sh])
-    inter = F.size(F.array_intersect(F.col("s"), probe_arr))
-    jac = inter / (F.size("s") + F.lit(len(sh)) - inter)
-    return (
-        sets.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= theta)
-        .select("doc_id", "jaccard")
-        .orderBy(F.col("jaccard").desc(), "doc_id")
-    )
+    hits: list[tuple[float, int]] = []
+    if sh:
+        assert_sidecar_populated(spark, table, "_sets", "probe_dedup")
+        assert_manifest_consistent(spark, table, "_sets", "probe_dedup")
+        bands = set(probe_bands(sh))
+        rows = read_by_key(spark, table, "bk", sorted({bk for _, bk in bands}),
+                           ["b", "bk", "doc_id"]).to_pydict()
+        cand = {
+            d for b, bk, d in zip(rows["b"], rows["bk"], rows["doc_id"])
+            if (b, bk) in bands
+        }
+        if cand and tombstones_df(spark, table) is not None:
+            # deleted documents never surface as near-dups
+            cand -= set(read_by_key(spark, f"{table}{_TOMBS_SUFFIX}",
+                                    "doc_id", sorted(cand),
+                                    ["doc_id"]).column("doc_id").to_pylist())
+        sets = read_by_key(spark, f"{table}_sets", "doc_id", sorted(cand),
+                           ["doc_id", "s"]).to_pydict()
+        probe = set(sh)
+        for d, s in zip(sets["doc_id"], sets["s"]):
+            inter = len(probe.intersection(s))
+            j = inter / (len(s) + len(sh) - inter)
+            if j >= theta:
+                hits.append((-j, d))
+        hits.sort()
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array([d for _, d in hits], pa.int64()),
+        "jaccard": pa.array([-j for j, _ in hits], pa.float64()),
+    }))

@@ -177,7 +177,6 @@ def register_external_store(spark, table: str, path: str) -> None:
     # directory sits next to it — a stale "no tombstones" verdict
     # would skip the takedown anti-join on the new registration
     _TOMBS_PRESENT_MEMO.pop((app, table), None)
-    _N_TOMBS_MEMO.pop((app, table), None)
     if table.endswith("_docs"):
         _N_DOCS_MEMO.pop((app, table[: -len("_docs")]), None)
         _MANIFEST_OK_MEMO.discard((app, table[: -len("_docs")]))
@@ -187,7 +186,7 @@ def register_external_store(spark, table: str, path: str) -> None:
     if table.endswith(_TOMBS_SUFFIX):
         base = table[: -len(_TOMBS_SUFFIX)]
         _TOMBS_PRESENT_MEMO.pop((app, base), None)
-        _N_TOMBS_MEMO.pop((app, base), None)
+        _N_DOCS_MEMO.pop((app, base), None)
     _SIDECAR_OK_MEMO.difference_update(
         {
             k for k in _SIDECAR_OK_MEMO
@@ -599,7 +598,10 @@ def assert_manifest_consistent(spark, table: str, id_suffix: str,
 
     * ``actual < manifest`` — data loss: directories wiped or the
       table mis-registered while the manifest survived (includes TOTAL
-      loss, which the emptiness-agreement guard cannot see);
+      loss, which the emptiness-agreement guard cannot see) — or a
+      deleting compaction that crashed before its stamp
+      (:func:`apply_tombstones_in_compaction`), which
+      :func:`repair_manifest` resolves;
     * ``actual > manifest`` — unaccounted ids: a crash between the id
       sidecar write and the manifest stamp, or a foreign writer;
       :func:`repair_manifest` is the explicit operator action;
@@ -636,9 +638,12 @@ def assert_manifest_consistent(spark, table: str, id_suffix: str,
         raise ValueError(
             f"{what}: ingest manifest records {total} ids but "
             f"{table}{id_suffix} holds only {actual} — store data was "
-            "LOST (directories wiped or table mis-registered); a "
-            "legitimately empty store has an empty manifest; rebuild "
-            "the store (or re-register the real files) before serving"
+            "LOST (directories wiped or table mis-registered) — unless "
+            "a deleting compaction crashed before stamping its deletes "
+            "(tombstones still recorded), which repair-manifest "
+            "resolves by adopting the compacted contents; otherwise "
+            "rebuild the store (or re-register the real files) before "
+            "serving; a legitimately empty store has an empty manifest"
         )
     if actual > total:
         raise ValueError(
@@ -691,8 +696,8 @@ def repair_manifest(spark, table: str, id_suffix: str) -> dict:
 #   set — probe/shard results never contain a deleted id, and the
 #   segmented raw-TF search stays EXACT (df is already derived from
 #   the looked-up postings at query time, so the anti-join corrects it
-#   per term for free, and N is the physical count minus the tombstone
-#   count) — rebuild parity without touching the other 100 TB;
+#   per term for free, and N counts the ingested ids not tombstoned)
+#   — rebuild parity without touching the other 100 TB;
 # * appends REFUSE a batch carrying a tombstoned id (re-ingesting it
 #   would resurrect the old rows' visibility the moment the tombstone
 #   clears) — compaction frees the id;
@@ -716,10 +721,6 @@ _TOMBS_SUFFIX = "_tombs"
 #: the file-listing cache: another session's NEW deletions become
 #: visible at refresh_store (the reader-reopen step).
 _TOMBS_PRESENT_MEMO: dict = {}
-
-#: (applicationId, table) -> tombstone count, for search_tf_index's
-#: N adjustment; invalidated with _TOMBS_PRESENT_MEMO.
-_N_TOMBS_MEMO: dict = {}
 
 
 def tombstones_df(spark, table: str) -> DataFrame | None:
@@ -747,20 +748,11 @@ def tombstones_df(spark, table: str) -> DataFrame | None:
     return None
 
 
-def n_tombstones(spark, table: str) -> int:
-    """Tombstone count, memoized per (session, table) — serving pays
-    it once per reader-open, not per query."""
-    key = (spark.sparkContext.applicationId, table)
-    if key not in _N_TOMBS_MEMO:
-        t = tombstones_df(spark, table)
-        _N_TOMBS_MEMO[key] = 0 if t is None else t.count()
-    return _N_TOMBS_MEMO[key]
-
-
 def _invalidate_tombs_memo(spark, table: str) -> None:
+    # the live-id count N depends on the tombstone set too
     app = spark.sparkContext.applicationId
     _TOMBS_PRESENT_MEMO.pop((app, table), None)
-    _N_TOMBS_MEMO.pop((app, table), None)
+    _N_DOCS_MEMO.pop((app, table), None)
 
 
 def clear_tombstones(spark, table: str, path: str) -> None:
@@ -914,10 +906,12 @@ def apply_tombstones_in_compaction(spark, table: str, id_suffix: str,
     Crash windows REFUSE, never serve wrong: a crash after the
     catalog repoint but before the manifest stamp leaves
     actual < manifest, which every serve/append/compact lane refuses
-    by name until ``repair-manifest`` adopts the surviving state; the
-    leftover tombstone entries then anti-join ids that are already
-    physically gone (a no-op) until the next compaction retires
-    them."""
+    by name ("LOST … a deleting compaction crashed …") until the
+    operator runs ``repair-manifest``, which adopts the compacted
+    contents; the leftover tombstone entries then name ids that are
+    already physically gone — a no-op for every serve path, including
+    ``search_tf_index``'s N, which counts the ``_docs`` ids not
+    tombstoned — until the next compaction retires them."""
     t = f"{table}{_TOMBS_SUFFIX}"
     tomb_dir = table_location(spark, t)
     spark.sql(f"DROP TABLE {t}")
@@ -937,8 +931,8 @@ def delete_from_tf_index(spark, table: str, ids,
     correctness): :func:`search_tf_index` anti-joins the looked-up
     postings against the tombstones (which corrects each queried
     term's df for free, since df is derived from those very rows) and
-    weights with N = ingested − tombstoned, so results equal a fresh
-    rebuild over the surviving corpus — pinned by
+    weights with N = the ingested ids not tombstoned, so results
+    equal a fresh rebuild over the surviving corpus — pinned by
     test_tf_delete_serves_exact_rebuild_parity.  Physical reclamation
     and freeing the ids for re-ingest happen at the next
     :func:`compact_tf_index`.  Protocol: :func:`segmented_delete`."""
@@ -1249,21 +1243,26 @@ def assert_sidecar_populated(spark, table: str, suffix: str, what: str,
         _SIDECAR_OK_MEMO.add(key)
 
 
-#: (applicationId, table) -> corpus count N, so a serving session pays
-#: the _docs sidecar count ONCE, not per query (at 1e9 docs the count
-#: is a corpus-sized column scan — fine per refresh, wrong per query).
-#: Invalidated by refresh_store (the reader-reopen step) and by
-#: same-session appends/compactions, the only events that change N.
+#: (applicationId, table) -> {live?: id count}, so a serving session
+#: pays the _docs sidecar count ONCE, not per query (at 1e9 docs the
+#: count is a corpus-sized column scan — fine per refresh, wrong per
+#: query).  Invalidated by refresh_store (the reader-reopen step) and
+#: by same-session appends, compactions and tombstone changes, the
+#: only events that change N.
 _N_DOCS_MEMO: dict = {}
 
 
-def _n_docs(spark, table: str) -> int:
-    key = (spark.sparkContext.applicationId, table)
-    if key not in _N_DOCS_MEMO:
-        _N_DOCS_MEMO[key] = (
-            spark.table(f"{table}_docs").select("doc_id").distinct().count()
-        )
-    return _N_DOCS_MEMO[key]
+def _n_docs(spark, table: str, tombs: DataFrame | None = None) -> int:
+    """Distinct ids in ``{table}_docs`` — only those not in ``tombs``
+    when it is given (the live corpus count N)."""
+    memo = _N_DOCS_MEMO.setdefault(
+        (spark.sparkContext.applicationId, table), {}
+    )
+    live = tombs is not None
+    if live not in memo:
+        ids = spark.table(f"{table}_docs").select("doc_id").distinct()
+        memo[live] = drop_tombstoned(ids, tombs, "doc_id").count()
+    return memo[live]
 
 
 def refresh_store(spark, table: str,
@@ -1284,7 +1283,6 @@ def refresh_store(spark, table: str,
     if spark.catalog.tableExists(f"{table}{_TOMBS_SUFFIX}"):
         spark.sql(f"REFRESH TABLE {table}{_TOMBS_SUFFIX}")
     _TOMBS_PRESENT_MEMO.pop((app, table), None)
-    _N_TOMBS_MEMO.pop((app, table), None)
     _N_DOCS_MEMO.pop((app, table), None)
     _MANIFEST_OK_MEMO.discard((app, table))
     _SIDECAR_OK_MEMO.difference_update(
@@ -1298,6 +1296,107 @@ def table_location(spark, table: str) -> str:
     if "Location" not in meta:
         raise ValueError(f"{table} has no location")
     return meta["Location"].removeprefix("file:")
+
+
+# ---------------------------------------------------------------------------
+# in-place bucket reads — key-small lookups with no Spark job
+# ---------------------------------------------------------------------------
+#
+# A bucketed write puts row r in bucket pmod(hash(r.key), nb), where
+# hash is Spark's Murmur3_x86_32 with seed 42, and names the file
+# ``part-…_{bucket:05d}.c000….parquet``.  Porting the hash lets a
+# key-small lookup open only its keys' bucket files with pyarrow, the
+# same files Spark's bucket pruning would scan, without scheduling a
+# job.  This ties the engine to Spark's bucket file naming and hash
+# seed; tests/test_properties.py's hash-layout test fails if either
+# changes.
+
+_M32 = 0xFFFFFFFF
+#: Spark's BucketingUtils.bucketIdRegex
+_BUCKET_FILE_RE = re.compile(r".*_(\d+)(?:\..*)?$")
+
+
+def _mix_k1(k: int) -> int:
+    k = (k * 0xCC9E2D51) & _M32
+    k = ((k << 15) | (k >> 17)) & _M32
+    return (k * 0x1B873593) & _M32
+
+
+def _mix_h1(h: int, k: int) -> int:
+    h ^= k
+    h = ((h << 13) | (h >> 19)) & _M32
+    return (h * 5 + 0xE6546B64) & _M32
+
+
+def spark_hash(value: str | int, dtype: str = "string") -> int:
+    """Spark's ``hash(value)`` of one non-null ``string`` or ``bigint``
+    value: Murmur3_x86_32, seed 42.  Strings hash their UTF-8 bytes
+    with Spark's own tail rule (each byte past the last whole 4-byte
+    word is mixed alone as a sign-extended int, not packed as in the
+    reference algorithm)."""
+    h = 42
+    if dtype == "string":
+        data = value.encode()
+        n = len(data)
+        tail = n - n % 4
+        for i in range(0, tail, 4):
+            h = _mix_h1(h, _mix_k1(int.from_bytes(data[i:i + 4], "little")))
+        for byte in data[tail:]:
+            h = _mix_h1(h, _mix_k1((byte - 256 if byte > 127 else byte)
+                                   & _M32))
+    else:
+        n = 8
+        v = value & 0xFFFFFFFFFFFFFFFF
+        h = _mix_h1(h, _mix_k1(v & _M32))
+        h = _mix_h1(h, _mix_k1(v >> 32))
+    h ^= n
+    h ^= h >> 16
+    h = (h * 0x85EBCA6B) & _M32
+    h ^= h >> 13
+    h = (h * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def read_by_key(spark, table: str, col: str, keys, columns: list[str]):
+    """``table``'s rows whose ``col`` is in ``keys``, as a pyarrow
+    Table of ``columns`` — read in place from the files the catalog
+    lists for ``table`` NOW (one DESCRIBE, a directory listing; no
+    Spark job).  On a table bucketed by ``col`` only the keys' bucket
+    files are opened; any other registration (unbucketed, bucketed by
+    another column, a key type the hash port does not cover) reads
+    every file with the same filter — correct answers, unpruned, which
+    is what a Spark scan of that registration reads too.
+
+    The location is resolved per call, so a reader sees another
+    session's committed appends without ``refresh_store`` and, during
+    a compaction's repoint, reads either the old or the new complete
+    directory.  Local-filesystem locations only, like the stores'
+    ``_meta.json`` sidecars."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = list(keys)
+    meta = _describe_meta(spark, table)
+    if "Location" not in meta:
+        raise ValueError(f"{table} has no location")
+    loc = meta["Location"].removeprefix("file:")
+    files = sorted(glob.glob(os.path.join(loc, "*.parquet")))
+    dtype = meta.get(col)
+    if (meta.get("Bucket Columns") == f"[`{col}`]"
+            and dtype in ("string", "bigint")):
+        nb = int(meta["Num Buckets"])
+        want = {spark_hash(k, dtype) % nb for k in keys}
+        files = [
+            f for f in files
+            if (m := _BUCKET_FILE_RE.match(os.path.basename(f))) is None
+            or int(m.group(1)) in want
+        ]
+    if not keys or not files:
+        return pa.table({c: [] for c in columns})
+    return pq.read_table(files, columns=columns, filters=[(col, "in", keys)])
 
 
 def store_report(spark, table: str, bucket_col: str) -> dict:
@@ -1970,7 +2069,7 @@ def search_tf_index(
     corpus count N comes from the ``_docs`` sidecar, memoized per
     (session, table) so serving pays the count once per reader-open,
     not per query (invalidated by refresh_store / append /
-    compaction).  A sidecar-less store (postings without ids) raises;
+    compaction / delete).  A sidecar-less store (postings without ids) raises;
     a store empty on BOTH sides serves the empty result set — note
     this makes TOTAL data loss (both directories wiped, meta sidecars
     surviving) indistinguishable from the legitimate
@@ -1986,8 +2085,8 @@ def search_tf_index(
     DELETIONS are exact here without compaction: tombstoned doc_ids
     (:func:`delete_from_tf_index`) are anti-joined out of the
     looked-up postings — which corrects each queried term's df for
-    free, since df is derived from those very rows — and N is the
-    ingested count minus the tombstone count, so results equal a
+    free, since df is derived from those very rows — and N counts the
+    ingested ids that are not tombstoned, so results equal a
     fresh rebuild over the surviving corpus (pinned by
     test_tf_delete_serves_exact_rebuild_parity).  This is why the
     segmented store is the one to use when takedowns are in scope:
@@ -2023,7 +2122,11 @@ def search_tf_index(
         spark.table(table).filter(F.col("term").isin(*terms)), tombs
     )
     if tombs is not None:
-        n_docs -= n_tombstones(spark, table)
+        # N counts the _docs ids that are not tombstoned, never
+        # "ingested minus tombstoned": a deleting compaction that
+        # crashed before retiring its tombstones leaves ids in the set
+        # that are already physically gone
+        n_docs = _n_docs(spark, table, tombs)
     dfc = posts.groupBy("term").agg(F.count(F.lit(1)).alias("dfc"))
     scored = (
         posts.join(F.broadcast(dfc), "term")
@@ -2057,8 +2160,12 @@ def compact_tf_index(spark, table: str, new_path: str) -> None:
     df_count is recounted from the merged postings) and the ``_docs``
     sidecar to distinct ids, while rewriting to one file per bucket.
     Protocol (guards, lease, tombstones): :func:`segmented_compact`."""
-    segmented_compact(spark, TF_STORE, table, new_path, "compact_tf_index")
-    _N_DOCS_MEMO.pop((spark.sparkContext.applicationId, table), None)
+    try:
+        segmented_compact(spark, TF_STORE, table, new_path,
+                          "compact_tf_index")
+    finally:
+        # a compaction that fails after its repoint has changed _docs
+        _N_DOCS_MEMO.pop((spark.sparkContext.applicationId, table), None)
 
 
 def _merged_index_df(spark, sf_dir: str) -> DataFrame:

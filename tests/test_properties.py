@@ -4396,14 +4396,106 @@ def test_cli_audit_matches_declared_keys(spark, sf_dir, capsys):
     )
 
 
+def _probe_cost(spark, table: str, text: str) -> tuple[list, int, list]:
+    """(rows, Spark jobs started, parquet files opened) of one WARM
+    ``probe_dedup`` call plus its collect — the guards' memos are
+    seeded by a first call.  Jobs are counted in a job group of their
+    own (the status tracker keeps every job of a fresh group, however
+    many jobs the session ran before); files are recorded at pyarrow's
+    reader, the only way the probe reads the store."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
+        probe_dedup,
+    )
+
+    probe_dedup(spark, table, text).collect()
+    real, opened = pq.read_table, []
+
+    def spy(source, *a, **k):
+        opened.extend(source)
+        return real(source, *a, **k)
+
+    sc = spark.sparkContext
+    group = f"probe-cost-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "probe_dedup cost contract")
+    pq.read_table = spy
+    try:
+        rows = [(r.doc_id, r.jaccard)
+                for r in probe_dedup(spark, table, text).collect()]
+    finally:
+        pq.read_table = real
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group)), opened
+
+
+def _assert_probe_reads_pruned(spark, table: str, text: str) -> list:
+    """probe_dedup's cost contract: a warm probe starts 0 Spark jobs
+    and opens only the bucket files of the probe's band keys, of its
+    candidates' ``_sets`` ids and of the tombstone table — files
+    opened ⊆ the probe's buckets (the in-place twin of Spark's
+    ``SelectedBucketsCount``).  Returns the probe's rows."""
+    import os
+    import re
+
+    from pyspark.sql import functions as F
+
+    from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
+        probe_bands,
+        probe_shingles,
+    )
+    from bdt_enwikisearch_hadoop_spark.functions.index_store import (
+        spark_hash,
+        table_buckets,
+        table_location,
+    )
+
+    rows, jobs, opened = _probe_cost(spark, table, text)
+    assert jobs == 0, jobs
+    bands = set(probe_bands(probe_shingles(text)))
+    cands = {
+        r.doc_id
+        for r in spark.table(table)
+        .filter(F.col("bk").isin(sorted({bk for _, bk in bands})))
+        .collect()
+        if (r.b, r.bk) in bands
+    }
+    nb = table_buckets(spark, table)
+    want = {
+        (os.path.realpath(table_location(spark, table)),
+         spark_hash(bk) % nb) for _, bk in bands
+    } | {
+        (os.path.realpath(table_location(spark, f"{table}_sets")),
+         spark_hash(d, "bigint") % nb) for d in cands
+    }
+    tombs = (os.path.realpath(table_location(spark, f"{table}_tombs"))
+             if spark.catalog.tableExists(f"{table}_tombs") else None)
+    assert any(
+        os.path.dirname(os.path.realpath(f)) == d for f in opened
+        for d, _ in want
+    ), opened
+    for f in opened:
+        d = os.path.dirname(os.path.realpath(f))
+        if d == tombs:
+            continue
+        bucket = int(re.match(r".*_(\d+)\.c\d+", os.path.basename(f))[1])
+        assert (d, bucket) in want, (f, sorted(want))
+    return rows
+
+
 def test_dedup_store_probe_contract(spark, sf_dir, tmp_path, capsys):
     """The persisted dedup index + online probe (dedup_store): a
     document probes to ITSELF at Jaccard 1.0; a one-token perturbation
     still matches it ≥ 0.8; unrelated and too-short-to-shingle probes
     return empty; the probe's pure-Python banding is bit-identical to
-    the corpus-side Spark banding; and the band-index read carries the
-    probe's bucket keys as a PUSHED filter (one bucket lookup per band,
-    never a scan).  The CLI `dedup-probe` prints the same rows."""
+    the corpus-side Spark banding; and a warm probe starts no Spark job
+    and opens only its band keys' and candidates' bucket files (one
+    bucket lookup per band, never a scan).  The CLI `dedup-probe`
+    prints the same rows."""
     from bdt_enwikisearch_hadoop_spark import cli
     from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
         build_dedup_index,
@@ -4463,16 +4555,8 @@ def test_dedup_store_probe_contract(spark, sf_dir, tmp_path, capsys):
             got_py = set(probe_bands(sh)) if sh else set()
             assert got_py == spark_bands.get(did, set()), did
 
-        plan = (
-            probe_dedup(spark, "t_dedup_idx", doc.text)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert any(
-            "PushedFilters" in ln and "bk" in ln
-            for ln in plan.splitlines()
-        ), plan
+        assert _assert_probe_reads_pruned(
+            spark, "t_dedup_idx", doc.text) == got
 
         rc = cli.main(
             ["--sf-dir", sf_dir, "dedup-probe", str(tmp_path / "didx"),
@@ -4631,7 +4715,7 @@ def test_append_dedup_index_equals_rebuild(spark, tmp_path):
     including a probe whose near-dup exists ONLY in the appended batch
     (the j84 'corpus is never rescanned' claim made true across days).
     Also pins the physical story: appended band rows land in the same
-    bucket layout, so the probe plan keeps its bucket pruning."""
+    bucket layout, so the probe keeps reading only its buckets."""
     from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
         append_dedup_index,
         build_dedup_index,
@@ -4679,13 +4763,8 @@ def test_append_dedup_index_equals_rebuild(spark, tmp_path):
         )
         assert got_new.get(5) == 8 / 10, got_new
         # physical: appended table still bucket-prunes the probe read
-        plan = (
-            probe_dedup(spark, "t_app_idx", new_probe)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SelectedBucketsCount" in plan
+        assert dict(_assert_probe_reads_pruned(
+            spark, "t_app_idx", new_probe)) == got_new
         # state parity: same rows in both stores
         for suffix in ("", "_sets"):
             assert (
@@ -4916,9 +4995,9 @@ def test_register_external_store_restores_bucketing(spark, sf_dir,
     """The FRESH-PROCESS path of register_external_store — the branch a
     new CLI process actually takes: drop the builder session's catalog
     entries, re-register from the _meta.json sidecars, and the probe
-    must return identical rows WITH bucket pruning restored
-    (SelectedBucketsCount — the CLUSTERED BY DDL carried the bucketing
-    spec across the catalog loss).  Also pins the no-sidecar fallback:
+    must return identical rows WITH bucket pruning restored (only the
+    probe's bucket files opened — the CLUSTERED BY DDL carried the
+    bucketing spec across the catalog loss).  Also pins the no-sidecar fallback:
     a plain external table still answers identically, just unpruned."""
     from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
         build_dedup_index,
@@ -4949,8 +5028,8 @@ def test_register_external_store_restores_bucketing(spark, sf_dir,
         q = probe_dedup(spark, "t_reg_idx", doc.text)
         got = [(r.doc_id, r.jaccard) for r in q.collect()]
         assert got == want
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in plan, plan
+        assert _assert_probe_reads_pruned(spark, "t_reg_idx",
+                                          doc.text) == want
 
         # no-sidecar fallback: plain external table, same rows
         import os
@@ -5020,8 +5099,8 @@ def test_compact_store_one_file_per_bucket_same_probes(spark, sf_dir,
     of daily shards = ~365 file opens per probe bucket), and
     compact_store rewrites the accumulated layout back to one file per
     bucket from the PERSISTED rows — probes identical before/after,
-    bucket spec and meta sidecar carried over (SelectedBucketsCount
-    still in the plan, table_buckets unchanged), immutable swap to a
+    bucket spec and meta sidecar carried over (probes still open only
+    their bucket files, table_buckets unchanged), immutable swap to a
     new path.  Exercised on both modalities."""
     import glob
 
@@ -5069,8 +5148,8 @@ def test_compact_store_one_file_per_bucket_same_probes(spark, sf_dir,
         assert table_buckets(spark, "t_cmp_idx") == 4
         q = probe_dedup(spark, "t_cmp_idx", doc.text)
         assert [(r.doc_id, r.jaccard) for r in q.collect()] == want
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in plan
+        assert _assert_probe_reads_pruned(spark, "t_cmp_idx",
+                                          doc.text) == want
 
         # embedding store: same loop
         build_embedding_index(
@@ -5117,6 +5196,123 @@ def test_compact_store_one_file_per_bucket_same_probes(spark, sf_dir,
                   "t_cmp_eidx_vecs", "t_cmp_eidx_compact_tmp",
                   "t_cmp_eidx_vecs_compact_tmp"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_spark_hash_port_matches_spark_bucket_layout(spark, tmp_path):
+    """Tripwire for the in-place probe route's dependency on Spark's
+    bucket layout: index_store.spark_hash must equal Spark's ``hash()``
+    on random ASCII and non-ASCII strings of every length 0–9 (every
+    UTF-8 tail length) and on longs including negatives and the ±2⁶³
+    bounds; and in a bucketed table every row must sit in the
+    file whose ``_0000N`` suffix is pmod(hash, nb).  If Spark changes
+    its hash, seed or file naming, this fails before a probe silently
+    reads the wrong files."""
+    import glob
+    import os
+    import random
+    import re
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from bdt_enwikisearch_hadoop_spark.functions.index_store import (
+        spark_hash,
+    )
+
+    rnd = random.Random(20261020)
+    alphabet = "abcXYZ019 _-|" + "éßøñ" + "ЖЯ" + "日本語" + "😀🧪"
+    strs = [
+        "".join(rnd.choice(alphabet) for _ in range(n))
+        for n in range(10) for _ in range(25)
+    ]
+    longs = [0, 1, -1, 2**63 - 1, -2**63, 2**32, -2**32, 2**31, -2**31 - 1]
+    longs += [rnd.randint(-2**63, 2**63 - 1) for _ in range(200)]
+    for vals, dtype in ((strs, "string"), (longs, "bigint")):
+        got = spark.createDataFrame(
+            [(v,) for v in vals], f"v {dtype}"
+        ).select("v", F.hash("v").alias("h")).collect()
+        bad = [(r.v, r.h) for r in got if spark_hash(r.v, dtype) != r.h]
+        assert len(got) == len(vals) and not bad, (dtype, bad[:5])
+
+    nb = 5
+    rows = [(i, s) for i, s in enumerate(strs)]
+    for col, dtype in (("k", "string"), ("id", "bigint")):
+        t = f"t_hash_layout_{col}"
+        path = str(tmp_path / t)
+        try:
+            (
+                spark.createDataFrame(rows, "id bigint, k string")
+                .write.option("path", path).bucketBy(nb, col).sortBy(col)
+                .saveAsTable(t)
+            )
+            seen = 0
+            for f in glob.glob(os.path.join(path, "*.parquet")):
+                m = re.match(r".*_(\d{5})\.c\d{3}\..*parquet$",
+                             os.path.basename(f))
+                assert m, f
+                for v in pq.read_table(f, columns=[col]).column(col).to_pylist():
+                    assert spark_hash(v, dtype) % nb == int(m[1]), (f, v)
+                    seen += 1
+            assert seen == len(rows), (col, seen)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_probe_dedup_cost_contract_two_store_sizes(spark, tmp_path):
+    """probe_dedup's cost class is 'the probe': at two store sizes a
+    warm probe starts 0 Spark jobs and opens only its band keys' and
+    its candidates' bucket files (files opened ⊆ the probe's buckets),
+    so the number of files it opens does not grow with the store; a
+    store with deletions probes with 0 jobs too, reading the tombstone
+    table's own files, and never returns a deleted id."""
+    import os
+    import random
+    import re
+
+    from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
+        build_dedup_index,
+        delete_from_dedup_index,
+    )
+
+    rnd = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = [" ".join(rnd.choice(vocab) for _ in range(30))
+             for _ in range(240)]
+    texts[200] = texts[3]  # an exact copy in the larger store
+    probe = texts[3]
+    near = probe.split(" ")
+    near[15] = "zzz"
+    near = " ".join(near)
+    opened_per_size = []
+    try:
+        for n in (40, 240):
+            t = f"t_probe_cost_{n}"
+            build_dedup_index(
+                spark, "unused", t, str(tmp_path / t), buckets=4,
+                docs=spark.createDataFrame(
+                    list(enumerate(texts[:n])), "doc_id long, text string"),
+            )
+            rows = _assert_probe_reads_pruned(spark, t, probe)
+            assert [d for d, _ in rows] == ([3, 200] if n > 200 else [3])
+            assert all(j == 1.0 for _, j in rows), rows
+            assert 3 in dict(_assert_probe_reads_pruned(spark, t, near))
+            opened_per_size.append(len({
+                (os.path.dirname(f),
+                 re.match(r".*_(\d+)\.c\d+", os.path.basename(f))[1])
+                for f in _probe_cost(spark, t, probe)[2]
+            }))
+        # buckets opened: |bands| band buckets + the candidates' _sets
+        # buckets, whatever the store size or files per bucket
+        assert max(opened_per_size) <= 4 + 2, opened_per_size
+
+        t = "t_probe_cost_240"
+        delete_from_dedup_index(spark, t, [3])
+        assert [d for d, _ in _assert_probe_reads_pruned(
+            spark, t, probe)] == [200]
+    finally:
+        for n in (40, 240):
+            for suf in ("", "_sets", "_tombs"):
+                spark.sql(f"DROP TABLE IF EXISTS t_probe_cost_{n}{suf}")
 
 
 def test_store_report_tracks_append_and_compact(spark, tmp_path, capsys):
@@ -7462,6 +7658,73 @@ def test_tf_delete_serves_exact_rebuild_parity(spark, tmp_path):
         for t in ("t_del_tf", "t_del_tf_docs", "t_del_tf_tombs",
                   "t_del_tf_ref", "t_del_tf_ref_docs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_tf_crashed_deleting_compaction_serves_exact_after_repair(
+    spark, tmp_path, monkeypatch
+):
+    """A deleting compaction that crashes after its repoint but before
+    it retires the tombstones (apply_tombstones_in_compaction) leaves
+    actual < manifest: serving refuses "LOST" naming repair-manifest,
+    and after that repair the store must serve EXACTLY a fresh rebuild
+    over the live documents.  The leftover tombstones name ids already
+    physically gone, so N must count the _docs ids not tombstoned (not
+    "ingested − tombstoned", which undercounts N by the deleted ids),
+    and the session's N memo must not survive the failed compaction
+    (a search would refuse "holds 40 ids" when _docs holds 35).
+    Checked with and without the refresh_store a serving session runs
+    between the crash and the repair."""
+    import random
+
+    import pytest
+
+    from bdt_enwikisearch_hadoop_spark.functions import index_store
+
+    rnd = random.Random(3)
+    vocab = ["a", "r", "bx", "q", "zz", "k", "m", "n", "p", "t", "u", "v"]
+    texts = [" ".join(rnd.choice(vocab) for _ in range(rnd.randint(4, 14)))
+             for _ in range(40)]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    queries = [("bx", "a", "r"), ("zz",), ("q", "k")]
+
+    def rows(table, terms):
+        return [(r.doc_id, r.score) for r in index_store.search_tf_index(
+            spark, table, terms, conjunctive=False).collect()]
+
+    def boom(*a, **k):
+        raise RuntimeError("crash before the tombstones are retired")
+
+    tables = ["t_ccr_ref"]
+    try:
+        index_store.build_tf_index(spark, docs.filter("doc_id >= 5"),
+                                   "t_ccr_ref", str(tmp_path / "ref"),
+                                   buckets=4)
+        want = {q: rows("t_ccr_ref", q) for q in queries}
+        assert all(want.values())
+        for refresh in (True, False):
+            t = f"t_ccr_{int(refresh)}"
+            tables.append(t)
+            index_store.build_tf_index(spark, docs, t, str(tmp_path / t),
+                                       buckets=4)
+            index_store.delete_from_tf_index(spark, t, range(5))
+            assert {q: rows(t, q) for q in queries} == want
+            with monkeypatch.context() as m:
+                m.setattr(index_store, "apply_tombstones_in_compaction", boom)
+                with pytest.raises(RuntimeError, match="crash"):
+                    index_store.compact_tf_index(spark, t,
+                                                 str(tmp_path / f"{t}c"))
+            if refresh:
+                index_store.refresh_store(spark, t, ("", "_docs"))
+                with pytest.raises(ValueError, match="LOST") as e:
+                    rows(t, queries[0])
+                assert "repair-manifest" in str(e.value)
+            index_store.repair_manifest(spark, t, "_docs")
+            assert {q: rows(t, q) for q in queries} == want, refresh
+    finally:
+        for t in tables:
+            for suf in ("", "_docs", "_tombs"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
 
 
 def test_rebuild_clears_inherited_tombstones(spark, tmp_path):
