@@ -24,8 +24,10 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
@@ -928,8 +930,8 @@ def delete_from_tf_index(spark, table: str, ids,
                          lease_stale_sec: float = 3600.0) -> dict:
     """Tombstone documents in a segmented raw-TF index — serving is
     EXACT from the next query on (no compaction needed for
-    correctness): :func:`search_tf_index` anti-joins the looked-up
-    postings against the tombstones (which corrects each queried
+    correctness): :func:`search_tf_index` drops the tombstoned ids
+    from the looked-up postings (which corrects each queried
     term's df for free, since df is derived from those very rows) and
     weights with N = the ingested ids not tombstoned, so results
     equal a fresh rebuild over the surviving corpus — pinned by
@@ -1358,36 +1360,92 @@ def spark_hash(value: str | int, dtype: str = "string") -> int:
     return h - (1 << 32) if h >> 31 else h
 
 
-def read_by_key(spark, table: str, col: str, keys, columns: list[str]):
-    """``table``'s rows whose ``col`` is in ``keys``, as a pyarrow
-    Table of ``columns`` — read in place from the files the catalog
-    lists for ``table`` NOW (one DESCRIBE, a directory listing; no
-    Spark job).  On a table bucketed by ``col`` only the keys' bucket
-    files are opened; any other registration (unbucketed, bucketed by
-    another column, a key type the hash port does not cover) reads
-    every file with the same filter — correct answers, unpruned, which
-    is what a Spark scan of that registration reads too.
+def _listed_layout(spark, table: str, col: str):
+    """(files, ``col``'s type, bucket count or None) of ``table`` as
+    THIS session's relation lists it: the file listing Spark caches
+    when the session first resolves the table and renews at
+    ``refresh_store`` and at the session's own writes — the listing a
+    Spark scan in this session would read.  Walks the analyzed plan's
+    ``HadoopFsRelation`` through py4j: no job, no DESCRIBE."""
+    from urllib.parse import unquote, urlparse
 
-    The location is resolved per call, so a reader sees another
-    session's committed appends without ``refresh_store`` and, during
-    a compaction's repoint, reads either the old or the new complete
-    directory.  Local-filesystem locations only, like the stores'
-    ``_meta.json`` sidecars."""
+    rel = (spark.table(table)._jdf.queryExecution().analyzed().child()
+           .relation())
+    uris = spark._jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        rel.location().inputFiles()).mkString("\n")
+    files = []
+    for uri in filter(None, uris.split("\n")):
+        u = urlparse(uri)
+        if u.scheme != "file":
+            raise ValueError(f"{table}: {uri} is not a local file — "
+                             "in-place reads need a local filesystem")
+        files.append(unquote(u.path))
+    spec = rel.bucketSpec()
+    nb = (spec.get().numBuckets() if spec.isDefined()
+          and spec.get().bucketColumnNames().mkString("\n") == col
+          else None)
+    return (sorted(files),
+            rel.dataSchema().apply(col).dataType().simpleString(), nb)
+
+
+def _current_layout(spark, table: str, col: str):
+    """:func:`_listed_layout`'s triple from the catalog NOW: one
+    DESCRIBE and a listing of the table's current location."""
     import glob
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    keys = list(keys)
     meta = _describe_meta(spark, table)
     if "Location" not in meta:
         raise ValueError(f"{table} has no location")
     loc = meta["Location"].removeprefix("file:")
+    nb = (int(meta["Num Buckets"])
+          if meta.get("Bucket Columns") == f"[`{col}`]" else None)
     files = sorted(glob.glob(os.path.join(loc, "*.parquet")))
-    dtype = meta.get(col)
-    if (meta.get("Bucket Columns") == f"[`{col}`]"
-            and dtype in ("string", "bigint")):
-        nb = int(meta["Num Buckets"])
+    return files, meta.get(col), nb
+
+
+def _all_nullable(t):
+    """pyarrow type ``t`` with every nested field nullable."""
+    import pyarrow as pa
+
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _all_nullable(f.type)) for f in t])
+    if pa.types.is_list(t):
+        return pa.list_(pa.field(t.value_field.name,
+                                 _all_nullable(t.value_type)))
+    return t
+
+
+def read_by_key(spark, table: str, col: str, keys, columns: list[str],
+                as_listed: bool = False):
+    """``table``'s rows whose ``col`` is in ``keys``, as a pyarrow
+    Table of ``columns`` — read in place, no Spark job.  On a table
+    bucketed by ``col`` only the keys' bucket files are opened; any
+    other registration (unbucketed, bucketed by another column, a key
+    type the hash port does not cover) reads every file with the same
+    filter — correct answers, unpruned, which is what a Spark scan of
+    that registration reads too.
+
+    Which files: by default the ones in the table's location NOW (one
+    DESCRIBE, a directory listing), so a reader sees another session's
+    committed appends without ``refresh_store`` and, during a
+    compaction's repoint, reads either the old or the new complete
+    directory.  ``as_listed`` reads the files this session's relation
+    lists instead (:func:`_listed_layout`): another session's appends
+    stay invisible until ``refresh_store``, so the rows agree with
+    anything the session memoized from its Spark view of the store
+    (the ranked searches' N).
+
+    Files written with different nested nullability (a compaction
+    fold's nullable ``max(tf)`` next to an append's non-null ``tf``)
+    are read under one all-nullable schema.  Local-filesystem locations
+    only, like the stores' ``_meta.json`` sidecars."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = list(keys)
+    files, dtype, nb = (_listed_layout if as_listed else _current_layout)(
+        spark, table, col)
+    if nb and dtype in ("string", "bigint"):
         want = {spark_hash(k, dtype) % nb for k in keys}
         files = [
             f for f in files
@@ -1396,7 +1454,10 @@ def read_by_key(spark, table: str, col: str, keys, columns: list[str]):
         ]
     if not keys or not files:
         return pa.table({c: [] for c in columns})
-    return pq.read_table(files, columns=columns, filters=[(col, "in", keys)])
+    schema = pa.schema([pa.field(f.name, _all_nullable(f.type))
+                        for f in pq.read_schema(files[0])])
+    return pq.read_table(files, columns=columns, schema=schema,
+                         filters=[(col, "in", keys)])
 
 
 def store_report(spark, table: str, bucket_col: str) -> dict:
@@ -1687,12 +1748,14 @@ def segmented_append(spark, store: SegmentedStore, table: str,
             .bucketBy(nb, store.id_col).sortBy(store.id_col)
             .saveAsTable(ids)
         )
-        # the stamp's count must SEE the writes just made: when the
-        # batch frame belongs to a cloned session (foreachBatch), the
-        # writes land via that clone and this session's cached file
-        # listing is stale — refresh before counting or the manifest
-        # under-records the shard and the NEXT append refuses
-        spark.sql(f"REFRESH TABLE {ids}")
+        # this session must SEE the writes just made: when the batch
+        # frame belongs to another session (foreachBatch's clone), the
+        # writes land via that session and this one's cached file
+        # listings are stale — refresh both, or the stamp's count
+        # under-records the shard (the NEXT append refuses) and this
+        # session's searches score stale postings with the new N
+        for t in (table, ids):
+            spark.sql(f"REFRESH TABLE {t}")
         stamp_manifest(spark, table, spark.table(ids).count(), shard_id)
 
 
@@ -1792,33 +1855,98 @@ def build_index(spark, sf_dir: str, table: str, path: str, buckets: int = 16) ->
         reset_manifest(spark, table, spark.table(f"{table}_norms").count())
 
 
+def _query_postings(spark, table: str, terms, value: str) -> dict:
+    """{term: {doc_id: value}} for the query ``terms``: their postings
+    rows read in place from the bucket files this session lists for
+    ``table`` (:func:`read_by_key` with ``as_listed``; no Spark job),
+    folded with per-(term, doc_id) ``max(value)`` — :func:`posting_rows`'
+    rule for the duplicates replayed segments carry.  A head term's
+    postings row is held whole in the driver here, as one Spark task
+    held it on the distributed plan (ROADMAP direction 11)."""
+    import pyarrow.compute as pc
+
+    rows = read_by_key(spark, table, "term", sorted(set(terms)),
+                       ["term", "postings"], as_listed=True)
+    out: dict = {}
+    if not rows.num_rows:
+        return out
+    posts = rows.column("postings").combine_chunks()
+    flat = pc.list_flatten(posts)
+    for t, d, v in zip(
+        pc.take(rows.column("term"), pc.list_parent_indices(posts)).to_pylist(),
+        pc.struct_field(flat, "doc_id").to_pylist(),
+        pc.struct_field(flat, value).to_pylist(),
+    ):
+        ps = out.setdefault(t, {})
+        if d not in ps or v > ps[d]:
+            ps[d] = v
+    return out
+
+
+def _summed(weights: dict, n_terms: int, conjunctive: bool) -> dict:
+    """doc_id → its weights summed over the query terms; conjunctive
+    keeps the docs matching ``n_terms`` distinct terms (a query that
+    repeats a term matches nothing, as it always has)."""
+    acc: dict = {}
+    hits: dict = {}
+    for ws in weights.values():
+        for d, w in ws.items():
+            acc[d] = acc.get(d, 0.0) + w
+            hits[d] = hits.get(d, 0) + 1
+    if conjunctive:
+        return {d: s for d, s in acc.items() if hits[d] == n_terms}
+    return acc
+
+
+_4DP = Decimal("0.0001")
+
+
+def spark_round4(x: float) -> float:
+    """Spark's ``round(x, 4)`` of a double: HALF_UP on the double's
+    decimal string (``BigDecimal(Double.toString(x))``), so the tie
+    ``1.23445`` goes up although the double lies below it."""
+    # + 0.0: BigDecimal has no negative zero
+    return float(Decimal(repr(x)).quantize(_4DP, ROUND_HALF_UP)) + 0.0
+
+
+def spark_floor4(x: float) -> float:
+    """Spark's ``floor(x * 10000) / 10000`` of a double (VSM scores)."""
+    return math.floor(x * 10000) / 10000
+
+
+def _top_k(spark, scores: dict, k: int) -> DataFrame:
+    """The ``k`` best (doc_id, score) by score desc then doc_id, as a
+    DataFrame built from an Arrow table: a local relation, so neither
+    the call nor its collect starts a job."""
+    import heapq
+
+    import pyarrow as pa
+
+    top = heapq.nsmallest(k, scores.items(), key=lambda r: (-r[1], r[0]))
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array([d for d, _ in top], pa.int64()),
+        "score": pa.array([s for _, s in top], pa.float64()),
+    }))
+
+
 def search_index(
     spark, table: str, terms: tuple[str, ...], k: int = 10, conjunctive: bool = True
 ) -> DataFrame:
-    """Ranked retrieval served from the persisted index: look up the
-    query terms' postings rows, explode, score, top-k.  Reads k index
-    rows — never the corpus.  Same serve-lane guards as the VSM path:
-    a store whose postings or norms table was wiped/mis-registered, or
-    whose ingest-manifest total diverges from the norms count (TOTAL
-    wipe with surviving sidecar files), refuses instead of serving
-    zero hits silently."""
+    """Ranked retrieval served from the persisted index: score = the
+    query terms' stored weights summed per doc, 4dp round, score-desc
+    doc_id tiebreak, top k.  No Spark job: the |Q| postings rows are
+    read in place from their term buckets (:func:`_query_postings`)
+    and ranked in Python (:func:`_top_k`) — never the corpus.  Same
+    serve-lane guards as the VSM path: a store whose postings or norms
+    table was wiped/mis-registered, or whose ingest-manifest total
+    diverges from the norms count (TOTAL wipe with surviving sidecar
+    files), refuses instead of serving zero hits silently."""
     assert_sidecar_populated(spark, table, "_norms", "search_index")
     assert_manifest_consistent(spark, table, "_norms", "search_index")
-    idx = spark.table(table).filter(F.col("term").isin(*terms))
-    hits = idx.select(
-        "term", F.explode("postings").alias("p")
-    ).select("term", F.col("p.doc_id").alias("doc_id"), F.col("p.wt").alias("wt"))
-    scored = hits.groupBy("doc_id").agg(
-        F.round(F.sum("wt"), 4).alias("score"),
-        F.countDistinct("term").alias("nterms"),
-    )
-    if conjunctive:
-        scored = scored.filter(F.col("nterms") == len(terms))
-    return (
-        scored.select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+    summed = _summed(_query_postings(spark, table, terms, "wt"),
+                     len(terms), conjunctive)
+    return _top_k(spark, {d: spark_round4(s) for d, s in summed.items()},
+                  k)
 
 
 def search_index_vsm(
@@ -1826,40 +1954,26 @@ def search_index_vsm(
 ) -> DataFrame:
     """i17's VSM cosine ranking served from the PERSISTED index + norms
     (conjunctive, 4dp-floored score, doc_id tiebreak — identical output
-    contract to the live i17).  The hit set (docs containing all |Q|
-    terms) is query-small, so it BROADCASTS onto the norms table scan:
-    the corpus-sized norms column is never shuffled — the only
-    exchanges in the plan belong to the |Q|-row postings aggregate.
+    contract to the live i17).  No Spark job: the |Q| postings rows
+    are read in place (:func:`_query_postings`), the hit set (docs
+    containing all |Q| terms) is formed in Python, and only the hit
+    ids' ``_norms`` buckets are read for their norms — the
+    corpus-sized norms column is never scanned.
     A store whose _norms sidecar went missing raises — the empty norms
-    join would serve zero hits silently (assert_sidecar_populated) —
+    lookup would serve zero hits silently (assert_sidecar_populated) —
     and so does a store whose ingest-manifest total diverges from the
     norms count (TOTAL wipe with surviving sidecar files:
     assert_manifest_consistent)."""
     assert_sidecar_populated(spark, table, "_norms", "search_index_vsm")
     assert_manifest_consistent(spark, table, "_norms", "search_index_vsm")
-    idx = spark.table(table).filter(F.col("term").isin(*terms))
-    hits = (
-        idx.select("term", F.explode("postings").alias("p"))
-        .select(
-            "term",
-            F.col("p.doc_id").alias("doc_id"),
-            F.col("p.wt").alias("wt"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("wt").alias("qdot"),
-            F.countDistinct("term").alias("nterms"),
-        )
-        .filter(F.col("nterms") == len(terms))
-    )
-    norms = spark.table(f"{table}_norms")
-    score = F.col("qdot") / F.col("nrm")
-    return (
-        norms.join(F.broadcast(hits), "doc_id")
-        .select("doc_id", (F.floor(score * 10000) / 10000).alias("score"))
-        .orderBy(F.col("score").desc(), "doc_id")
-        .limit(k)
-    )
+    qdot = _summed(_query_postings(spark, table, terms, "wt"), len(terms),
+                   True)
+    norms = read_by_key(spark, f"{table}_norms", "doc_id", sorted(qdot),
+                        ["doc_id", "nrm"], as_listed=True).to_pydict()
+    return _top_k(spark, {
+        d: spark_floor4(qdot[d] / n)
+        for d, n in zip(norms["doc_id"], norms["nrm"])
+    }, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1945,9 +2059,10 @@ def posting_rows(index: DataFrame,
     Per-(term, doc_id) ``max(tf)`` collapses the duplicates segments
     can carry (a replayed segment after a crash, or a replay with a
     conflicting tf for an already-ingested doc), so df derived from
-    these rows never double-counts a document.  The serve path
-    (:func:`search_tf_index`) and the compaction fold
-    (:func:`fold_postings`) both read postings through it."""
+    these rows never double-counts a document.  The compaction fold
+    (:func:`fold_postings`) reads postings through it; the serve path
+    (:func:`search_tf_index`) reads its |Q| rows in place and applies
+    the same max(tf) rule in Python (:func:`_query_postings`)."""
     posts = (
         index.select("term", F.explode("postings").alias("p"))
         .select(
@@ -2065,11 +2180,16 @@ def search_tf_index(
     serve stale global weights until rebuilt; parity with a full
     weighted rebuild is pinned in tests).
 
-    Reads the |Q| query terms' segment rows (bucket-pruned); the
-    corpus count N comes from the ``_docs`` sidecar, memoized per
-    (session, table) so serving pays the count once per reader-open,
-    not per query (invalidated by refresh_store / append /
-    compaction / delete).  A sidecar-less store (postings without ids) raises;
+    No Spark job per query: the |Q| query terms' segment rows are read
+    in place from their term buckets and folded in Python
+    (:func:`_query_postings`, :func:`_top_k`).  The corpus count N
+    comes from the ``_docs`` sidecar, memoized per (session, table) so
+    serving pays the count once per reader-open, not per query
+    (invalidated by refresh_store / append / compaction / delete).
+    The segment rows are read from the files this session's relation
+    lists, which the same events renew, so N and the postings always
+    come from one view of the store: another session's append changes
+    neither until ``refresh_store``.  A sidecar-less store (postings without ids) raises;
     a store empty on BOTH sides serves the empty result set — note
     this makes TOTAL data loss (both directories wiped, meta sidecars
     surviving) indistinguishable from the legitimate
@@ -2079,12 +2199,13 @@ def search_tf_index(
     not by trusting the per-segment ``df_count`` counters — this makes
     serving immune to the replayed-segment duplicates the append
     ordering can leave behind.  The per-(doc,term) weight expression
-    is the same op chain as ``_tfidf_from`` (cast-to-double division,
-    log, multiply), so scores match the weighted store bit-for-bit.
+    is the same op chain as ``_tfidf_from`` (double division, log,
+    multiply) and the 4dp round is Spark's (:func:`spark_round4`), so
+    scores match the weighted store's.
 
     DELETIONS are exact here without compaction: tombstoned doc_ids
-    (:func:`delete_from_tf_index`) are anti-joined out of the
-    looked-up postings — which corrects each queried term's df for
+    (:func:`delete_from_tf_index`) are dropped from the looked-up
+    postings (the tombstone table's files are read for the hit ids) — which corrects each queried term's df for
     free, since df is derived from those very rows — and N counts the
     ingested ids that are not tombstoned, so results equal a
     fresh rebuild over the surviving corpus (pinned by
@@ -2118,47 +2239,38 @@ def search_tf_index(
             "the store registered without its _docs sidecar?"
         )
     tombs = tombstones_df(spark, table)
-    posts = posting_rows(
-        spark.table(table).filter(F.col("term").isin(*terms)), tombs
-    )
+    posts = _query_postings(spark, table, terms, "tf")
     if tombs is not None:
         # N counts the _docs ids that are not tombstoned, never
         # "ingested minus tombstoned": a deleting compaction that
         # crashed before retiring its tombstones leaves ids in the set
         # that are already physically gone
         n_docs = _n_docs(spark, table, tombs)
-    dfc = posts.groupBy("term").agg(F.count(F.lit(1)).alias("dfc"))
-    scored = (
-        posts.join(F.broadcast(dfc), "term")
-        .select(
-            "doc_id",
-            "term",
-            (
-                F.col("tf")
-                * F.log(F.lit(n_docs).cast("double") / F.col("dfc"))
-            ).alias("wt"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum("wt"), 4).alias("score"),
-            F.countDistinct("term").alias("nterms"),
-        )
-    )
-    if conjunctive:
-        scored = scored.filter(F.col("nterms") == len(terms))
-    return (
-        scored.select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+        dead = set(read_by_key(
+            spark, f"{table}{_TOMBS_SUFFIX}", "doc_id",
+            sorted({d for ps in posts.values() for d in ps}), ["doc_id"],
+            as_listed=True,
+        ).column("doc_id").to_pylist())
+        # with every ingested id tombstoned nothing live is left to
+        # rank (what postings remain are a crashed append's orphans)
+        posts = {t: {d: tf for d, tf in ps.items() if d not in dead}
+                 for t, ps in posts.items() if n_docs > 0}
+    # df = the surviving doc_ids; wt = tf·ln(N/df), Spark's op chain
+    summed = _summed({
+        t: {d: tf * math.log(n_docs / len(ps)) for d, tf in ps.items()}
+        for t, ps in posts.items()
+    }, len(terms), conjunctive)
+    return _top_k(spark, {d: spark_round4(s) for d, s in summed.items()},
+                  k)
 
 
 def compact_tf_index(spark, table: str, new_path: str) -> None:
     """Fold the accumulated segments back to ONE row per term
-    (:func:`fold_postings` — the serve path's own per-(term, doc_id)
-    max(tf) collapse, so replay duplicates disappear here too and
-    df_count is recounted from the merged postings) and the ``_docs``
-    sidecar to distinct ids, while rewriting to one file per bucket.
+    (:func:`fold_postings` — the same per-(term, doc_id) max(tf)
+    collapse the serve path applies, so replay duplicates disappear
+    here too and df_count is recounted from the merged postings) and
+    the ``_docs`` sidecar to distinct ids, while rewriting to one file
+    per bucket.
     Protocol (guards, lease, tombstones): :func:`segmented_compact`."""
     try:
         segmented_compact(spark, TF_STORE, table, new_path,

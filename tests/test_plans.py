@@ -1517,60 +1517,6 @@ def test_exact_quantile_keys_single_sort_no_rescans(spark, sf_dir):
         assert p.count("Sort [") <= 2, key
 
 
-def test_search_tf_index_one_exchange_bucket_pruned(spark, sf_dir,
-                                                    tmp_path):
-    """The segmented raw-TF serve plan is the plan a 100 TB query needs:
-    bucket-pruned term lookups (the |Q|-term filter reaches the
-    bucketed scan), term-keyed aggregates RIDING the bucketing (no
-    corpus-sized exchange — hashpartitioning(term) satisfies the
-    (term, doc_id) clustering), ONE hash exchange total on the
-    query-small hit set's doc_id, the df side broadcast, and ZERO
-    range exchanges — the ordered top-k folds into
-    TakeOrderedAndProject, never a global sort."""
-    from bdt_enwikisearch_hadoop_spark.functions.index_store import (
-        build_tf_index,
-        search_tf_index,
-    )
-    from bdt_enwikisearch_hadoop_spark.functions.text_search import (
-        QUERY_TERMS,
-    )
-    from bdt_enwikisearch_hadoop_spark.sources import load
-
-    try:
-        build_tf_index(
-            spark, load(spark, sf_dir, "documents"), "t_plan_stf",
-            str(tmp_path / "stf"),
-        )
-        q = search_tf_index(spark, "t_plan_stf", QUERY_TERMS)
-        assert q.count() > 0
-        p = q._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in p, p
-        assert p.count("Exchange hashpartitioning") == 1, p
-        assert p.count("Exchange rangepartitioning") == 0, p
-        assert "TakeOrderedAndProject" in p, p
-        assert "BroadcastExchange" in p, p
-        assert "CartesianProduct" not in p
-        # tombstones must not change the serve plan's exchange shape:
-        # the exclusion anti-join BROADCASTS the (request-sized)
-        # tombstone set onto the query-small postings — still exactly
-        # one hash exchange, no shuffle added at serve latency
-        from bdt_enwikisearch_hadoop_spark.functions.index_store import (
-            delete_from_tf_index,
-        )
-
-        delete_from_tf_index(spark, "t_plan_stf", [1, 2, 3])
-        q2 = search_tf_index(spark, "t_plan_stf", QUERY_TERMS)
-        p2 = q2._jdf.queryExecution().executedPlan().toString()
-        assert "LeftAnti, BuildRight" in p2, p2
-        assert p2.count("Exchange hashpartitioning") == 1, p2
-        assert p2.count("Exchange rangepartitioning") == 0, p2
-        assert "SelectedBucketsCount" in p2, p2
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_plan_stf")
-        spark.sql("DROP TABLE IF EXISTS t_plan_stf_docs")
-        spark.sql("DROP TABLE IF EXISTS t_plan_stf_tombs")
-
-
 def _struct_array_distincts(df) -> list[str]:
     """Every ``ArrayDistinct`` over an array of STRUCTS in ``df``'s
     optimized plan — Spark compares struct elements pairwise there, so

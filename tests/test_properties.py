@@ -153,9 +153,9 @@ def test_index_backed_search_matches_live_search(spark, sf_dir, tmp_path):
 def test_vsm_served_from_store_matches_live_i17(spark, sf_dir, tmp_path):
     """The persisted norms table must make store-served VSM cosine equal
     the live i17 (same top-10, same 4dp-floored scores), and the
-    corpus-sized norms side must never shuffle: the query-small hit set
-    broadcasts onto the norms scan (the join is a BroadcastHashJoin and
-    no Exchange hashpartitioning touches the norms columns)."""
+    corpus-sized norms side must never be scanned: a warm search starts
+    no Spark job and reads only the query terms' postings buckets and
+    the hit ids' norms buckets."""
     from bdt_enwikisearch_hadoop_spark.functions.index_store import (
         build_index,
         search_index_vsm,
@@ -170,14 +170,9 @@ def test_vsm_served_from_store_matches_live_i17(spark, sf_dir, tmp_path):
         assert [(r["doc_id"], round(r["score"], 4)) for r in served] == [
             (r["doc_id"], round(r["score"], 4)) for r in live
         ]
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        norm_exchanges = [
-            ln
-            for ln in plan.splitlines()
-            if "Exchange hashpartitioning" in ln and "nrm" in ln
-        ]
-        assert not norm_exchanges, norm_exchanges
+        assert _assert_search_reads_pruned(
+            spark, "t_vsm_index", QUERY_TERMS, "vsm") == [
+            tuple(r) for r in served]
     finally:
         spark.sql("DROP TABLE IF EXISTS t_vsm_index")
         spark.sql("DROP TABLE IF EXISTS t_vsm_index_norms")
@@ -4396,22 +4391,19 @@ def test_cli_audit_matches_declared_keys(spark, sf_dir, capsys):
     )
 
 
-def _probe_cost(spark, table: str, text: str) -> tuple[list, int, list]:
+def _call_cost(spark, call) -> tuple[list, int, list]:
     """(rows, Spark jobs started, parquet files opened) of one WARM
-    ``probe_dedup`` call plus its collect — the guards' memos are
-    seeded by a first call.  Jobs are counted in a job group of their
-    own (the status tracker keeps every job of a fresh group, however
-    many jobs the session ran before); files are recorded at pyarrow's
-    reader, the only way the probe reads the store."""
+    ``call()`` plus the collect of the DataFrame it returns — the
+    guards' memos are seeded by a first call.  Jobs are counted in a
+    job group of their own (the status tracker keeps every job of a
+    fresh group, however many jobs the session ran before); files are
+    recorded at pyarrow's reader, the only way the in-place serve
+    paths read a store."""
     import uuid
 
     import pyarrow.parquet as pq
 
-    from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
-        probe_dedup,
-    )
-
-    probe_dedup(spark, table, text).collect()
+    call().collect()
     real, opened = pq.read_table, []
 
     def spy(source, *a, **k):
@@ -4419,18 +4411,93 @@ def _probe_cost(spark, table: str, text: str) -> tuple[list, int, list]:
         return real(source, *a, **k)
 
     sc = spark.sparkContext
-    group = f"probe-cost-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "probe_dedup cost contract")
+    group = f"call-cost-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "serve cost contract")
     pq.read_table = spy
     try:
-        rows = [(r.doc_id, r.jaccard)
-                for r in probe_dedup(spark, table, text).collect()]
+        rows = [tuple(r) for r in call().collect()]
     finally:
         pq.read_table = real
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     return rows, len(sc.statusTracker().getJobIdsForGroup(group)), opened
+
+
+def _probe_cost(spark, table: str, text: str) -> tuple[list, int, list]:
+    """:func:`_call_cost` of one ``probe_dedup`` call."""
+    from bdt_enwikisearch_hadoop_spark.functions.dedup_store import (
+        probe_dedup,
+    )
+
+    return _call_cost(spark, lambda: probe_dedup(spark, table, text))
+
+
+def _assert_opened_within(opened: list, want: set, free_dirs=()) -> None:
+    """Every file opened lies in a wanted (directory, bucket) pair or
+    in one of ``free_dirs``, and at least one wanted directory was
+    read; paths compare after realpath."""
+    import os
+    import re
+
+    assert any(
+        os.path.dirname(os.path.realpath(f)) == d for f in opened
+        for d, _ in want
+    ), opened
+    for f in opened:
+        d = os.path.dirname(os.path.realpath(f))
+        if d in free_dirs:
+            continue
+        bucket = int(re.match(r".*_(\d+)\.c\d+", os.path.basename(f))[1])
+        assert (d, bucket) in want, (f, sorted(want))
+
+
+def _assert_search_reads_pruned(spark, table: str, terms: tuple,
+                                kind: str = "tf",
+                                conjunctive: bool = True) -> list:
+    """The ranked searches' cost contract: a warm ``search_tf_index``
+    (kind "tf"), ``search_index`` ("index") or ``search_index_vsm``
+    ("vsm") starts 0 Spark jobs and opens only the query terms' bucket
+    files, for VSM the hit ids' ``_norms`` buckets, and the tombstone
+    table's files — the in-place twin of Spark's
+    ``SelectedBucketsCount``.  Returns the search's rows."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from bdt_enwikisearch_hadoop_spark.functions import index_store as ix
+
+    search = {
+        "tf": lambda: ix.search_tf_index(spark, table, terms,
+                                         conjunctive=conjunctive),
+        "index": lambda: ix.search_index(spark, table, terms,
+                                         conjunctive=conjunctive),
+        "vsm": lambda: ix.search_index_vsm(spark, table, terms),
+    }[kind]
+    rows, jobs, opened = _call_cost(spark, search)
+    assert jobs == 0, jobs
+
+    def loc(t):
+        return os.path.realpath(ix.table_location(spark, t))
+
+    nb = ix.table_buckets(spark, table)
+    want = {(loc(table), ix.spark_hash(t) % nb) for t in terms}
+    if kind == "vsm":
+        hits = [
+            r.doc_id for r in spark.table(table)
+            .filter(F.col("term").isin(*terms))
+            .select("term", F.explode("postings.doc_id").alias("doc_id"))
+            .groupBy("doc_id").agg(F.countDistinct("term").alias("n"))
+            .filter(F.col("n") == len(terms)).collect()
+        ]
+        nbn = ix.table_buckets(spark, f"{table}_norms")
+        want |= {(loc(f"{table}_norms"), ix.spark_hash(d, "bigint") % nbn)
+                 for d in hits}
+    tombs = f"{table}_tombs"
+    _assert_opened_within(
+        opened, want,
+        (loc(tombs),) if spark.catalog.tableExists(tombs) else ())
+    return rows
 
 
 def _assert_probe_reads_pruned(spark, table: str, text: str) -> list:
@@ -4440,7 +4507,6 @@ def _assert_probe_reads_pruned(spark, table: str, text: str) -> list:
     opened ⊆ the probe's buckets (the in-place twin of Spark's
     ``SelectedBucketsCount``).  Returns the probe's rows."""
     import os
-    import re
 
     from pyspark.sql import functions as F
 
@@ -4472,18 +4538,10 @@ def _assert_probe_reads_pruned(spark, table: str, text: str) -> list:
         (os.path.realpath(table_location(spark, f"{table}_sets")),
          spark_hash(d, "bigint") % nb) for d in cands
     }
-    tombs = (os.path.realpath(table_location(spark, f"{table}_tombs"))
-             if spark.catalog.tableExists(f"{table}_tombs") else None)
-    assert any(
-        os.path.dirname(os.path.realpath(f)) == d for f in opened
-        for d, _ in want
-    ), opened
-    for f in opened:
-        d = os.path.dirname(os.path.realpath(f))
-        if d == tombs:
-            continue
-        bucket = int(re.match(r".*_(\d+)\.c\d+", os.path.basename(f))[1])
-        assert (d, bucket) in want, (f, sorted(want))
+    _assert_opened_within(
+        opened, want,
+        (os.path.realpath(table_location(spark, f"{table}_tombs")),)
+        if spark.catalog.tableExists(f"{table}_tombs") else ())
     return rows
 
 
@@ -5315,6 +5373,219 @@ def test_probe_dedup_cost_contract_two_store_sizes(spark, tmp_path):
                 spark.sql(f"DROP TABLE IF EXISTS t_probe_cost_{n}{suf}")
 
 
+def _zipf_texts(n: int, seed: int, vocab: int = 300) -> list[str]:
+    """``n`` texts of 5–40 tokens drawn from ``vocab`` words ``t0x``,
+    ``t1x``, … with Zipfian popularity, so head terms span many docs."""
+    import random
+
+    rnd = random.Random(seed)
+    words = [f"t{i}x" for i in range(vocab)]
+    weights = [1 / (i + 1) for i in range(vocab)]
+    return [" ".join(rnd.choices(words, weights, k=rnd.randint(5, 40)))
+            for _ in range(n)]
+
+
+def test_read_by_key_reads_mixed_nested_nullability(spark, tmp_path):
+    """A compaction fold writes postings with a nullable ``max(tf)``
+    while builds and appends write ``tf not null``; after compact →
+    append a term's bucket holds both, and the in-place reader must
+    read them under one schema (stores already on disk mix both, so
+    the reader, not the writer, is where this is settled)."""
+    import os
+
+    from bdt_enwikisearch_hadoop_spark.functions import index_store as ix
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    t = "t_rbk_null"
+    try:
+        ix.build_tf_index(spark, docs([(1, "a b c"), (2, "c d")]), t,
+                          str(tmp_path / "s"), buckets=4)
+        ix.append_tf_index(spark, t, docs([(3, "c e c")]))
+        ix.compact_tf_index(spark, t, str(tmp_path / "s2"))
+        loc = ix.table_location(spark, t)
+        before = set(os.listdir(loc))
+        ix.append_tf_index(spark, t, docs([(4, "c f")]))
+        # list the append's non-null files first, whatever their uuids:
+        # a reader that adopts the first file's schema then cannot
+        # read the compacted nullable file
+        for f in set(os.listdir(loc)) - before:
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(loc, f), os.path.join(loc, f"a{f}"))
+        ix.refresh_store(spark, t, ("", "_docs"))
+        got = ix.read_by_key(spark, t, "term", ["c"], ["term", "postings"])
+        assert sorted(
+            (p["doc_id"], p["tf"])
+            for ps in got.column("postings").to_pylist() for p in ps
+        ) == [(1, 1), (2, 1), (3, 2), (4, 1)]
+        assert [(r.doc_id, r.score) for r in ix.search_tf_index(
+            spark, t, ("c",)).collect()] == [(1, 0.0), (2, 0.0), (3, 0.0),
+                                             (4, 0.0)]
+    finally:
+        for suf in ("", "_docs"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
+
+
+def test_search_cost_contract_two_store_sizes(spark, tmp_path):
+    """The ranked searches' cost class is 'the query': at two store
+    sizes a warm search_index (OR and AND), search_index_vsm and
+    search_tf_index start 0 Spark jobs and open only the query terms'
+    bucket files (VSM: plus the hit ids' _norms buckets), so the
+    buckets opened do not grow with the store.  On the segmented
+    store the same holds after an append (more files per bucket) and
+    after a deletion (the tombstone table's files are read too, and no
+    deleted id is returned); a fresh segmented store serves exactly
+    the weighted store's answers."""
+    import os
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bdt_enwikisearch_hadoop_spark.functions import index_store as ix
+
+    texts = _zipf_texts(360, seed=11)
+    queries = [("t0x",), ("t1x", "t4x"), ("t0x", "t2x", "t9x")]
+    tables = []
+
+    def buckets_opened(kind, t, terms):
+        search = {"tf": ix.search_tf_index, "index": ix.search_index}[kind]
+        opened = _call_cost(spark, lambda: search(spark, t, terms))[2]
+        return {(os.path.dirname(f),
+                 re.match(r".*_(\d+)\.c\d+", os.path.basename(f))[1])
+                for f in opened}
+
+    try:
+        for n in (60, 360):
+            sf = str(tmp_path / f"c{n}")
+            os.makedirs(sf)
+            pq.write_table(pa.table({
+                "doc_id": pa.array(range(n), pa.int64()),
+                "text": pa.array(texts[:n]),
+            }), os.path.join(sf, "documents.parquet"))
+            w, tf = f"t_sc_w{n}", f"t_sc_tf{n}"
+            tables += [w, tf]
+            ix.build_index(spark, sf, w, str(tmp_path / w), buckets=4)
+            ix.build_tf_index(
+                spark, spark.read.parquet(os.path.join(sf, "documents.parquet")),
+                tf, str(tmp_path / tf), buckets=4)
+            for q in queries:
+                for conj in (True, False):
+                    want = _assert_search_reads_pruned(
+                        spark, w, q, "index", conjunctive=conj)
+                    assert want, (n, q, conj)
+                    assert _assert_search_reads_pruned(
+                        spark, tf, q, conjunctive=conj) == want
+                assert _assert_search_reads_pruned(spark, w, q, "vsm")
+                for kind, t in (("index", w), ("tf", tf)):
+                    assert len(buckets_opened(kind, t, q)) <= len(q)
+
+        tf = "t_sc_tf360"
+        ix.append_tf_index(spark, tf, spark.createDataFrame(
+            [(1000 + i, s) for i, s in enumerate(_zipf_texts(30, seed=12))],
+            "doc_id long, text string"))
+        gone = [d for d, _ in _assert_search_reads_pruned(
+            spark, tf, ("t0x",), conjunctive=False)][:3]
+        ix.delete_from_tf_index(spark, tf, gone)
+        for q in queries:
+            for conj in (True, False):
+                rows = _assert_search_reads_pruned(spark, tf, q,
+                                                   conjunctive=conj)
+                assert rows and not {d for d, _ in rows} & set(gone)
+    finally:
+        for t in tables:
+            for suf in ("", "_docs", "_norms", "_tombs"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
+
+
+def test_search_tf_index_cross_session_reader_sees_one_view(spark,
+                                                           tmp_path):
+    """A serving session's search_tf_index answers from ONE view of the
+    store: after another session appends a batch, the reader serves
+    exactly the pre-append answer until it runs refresh_store, and
+    exactly the post-append answer (equal to a rebuild over both
+    batches) after it — never the new postings scored with the old,
+    memoized N.  The writer registers the same files under its own
+    name, as another process would; its batch frame belongs to the
+    reader's session (foreachBatch's shape), and the writer still
+    serves its own append at once."""
+    from bdt_enwikisearch_hadoop_spark.functions import index_store as ix
+
+    texts = _zipf_texts(140, seed=21)
+
+    def docs(lo, hi):
+        return spark.createDataFrame(
+            [(i, texts[i]) for i in range(lo, hi)], "doc_id long, text string")
+
+    queries = [("t0x",), ("t1x", "t3x"), ("t2x", "t5x", "t8x")]
+
+    def answers(session, t):
+        return {(q, conj): [(r.doc_id, r.score) for r in ix.search_tf_index(
+            session, t, q, conjunctive=conj).collect()]
+            for q in queries for conj in (True, False)}
+
+    path = str(tmp_path / "xs")
+    tables = ["t_xs_tf", "t_xs_pre", "t_xs_post", "t_xs_w"]
+    try:
+        ix.build_tf_index(spark, docs(0, 100), "t_xs_tf", path, buckets=4)
+        ix.build_tf_index(spark, docs(0, 100), "t_xs_pre",
+                          str(tmp_path / "pre"), buckets=4)
+        ix.build_tf_index(spark, docs(0, 140), "t_xs_post",
+                          str(tmp_path / "post"), buckets=4)
+        pre, post = answers(spark, "t_xs_pre"), answers(spark, "t_xs_post")
+        assert pre != post
+        assert answers(spark, "t_xs_tf") == pre
+
+        writer = spark.newSession()
+        for suf in ("", "_docs"):
+            ix.register_external_store(writer, f"t_xs_w{suf}", f"{path}{suf}")
+        ix.append_tf_index(writer, "t_xs_w", docs(100, 140))
+        assert answers(writer, "t_xs_w") == post
+        assert answers(spark, "t_xs_tf") == pre
+        ix.refresh_store(spark, "t_xs_tf", ("", "_docs"))
+        assert answers(spark, "t_xs_tf") == post
+    finally:
+        for t in tables:
+            for suf in ("", "_docs"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
+
+
+def test_spark_rounding_ports_match_spark(spark):
+    """The in-place searches round in Python; the ports must agree
+    exactly with Spark's ``round(x, 4)`` (HALF_UP on the double's
+    decimal string) and the VSM ``floor(x * 10000) / 10000`` on random
+    doubles and on exact decimal ties — a Spark change to either fails
+    here, as the hash-layout test does for bucketing."""
+    import math
+    import random
+
+    from pyspark.sql import functions as F
+
+    from bdt_enwikisearch_hadoop_spark.functions.index_store import (
+        spark_floor4,
+        spark_round4,
+    )
+
+    rnd = random.Random(13)
+    ties = [0.00005, 1.23445, 2.50005, 0.00015, 12.34565, 7.77775,
+            1e-05, 0.99995, 123.45675]
+    xs = (ties + [-x for x in ties] + [0.0, 0.1 + 0.2, 1 / 3, 2 / 3]
+          + [rnd.uniform(-50, 50) for _ in range(300)]
+          + [rnd.uniform(0, 1e-3) for _ in range(100)]
+          + [round(rnd.uniform(0, 100), 5) for _ in range(300)])
+    got = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        "x", F.round("x", 4).alias("r"),
+        (F.floor(F.col("x") * 10000) / 10000).alias("f"),
+    ).collect()
+    assert len(got) == len(xs)
+    for row in got:
+        r, f = spark_round4(row.x), spark_floor4(row.x)
+        assert r == row.r and math.copysign(1, r) == math.copysign(1, row.r), (
+            row.x, r, row.r)
+        assert f == row.f, (row.x, f, row.f)
+
+
 def test_store_report_tracks_append_and_compact(spark, tmp_path, capsys):
     """store_report's dials move the way the ops story says: files per
     bucket grows by one per append (the per-probe file-open cost) and
@@ -5704,8 +5975,8 @@ def test_tf_segment_index_serves_current_weights(spark, sf_dir, tmp_path):
     a weighted store cannot do without rebuilding.  Also pins: replay
     idempotence, immunity to the duplicated segment a crash-replay can
     leave (per-(term,doc) max(tf), df derived from deduped postings),
-    bucket-pruned term lookups, and the compaction fold back to one
-    row per term."""
+    bucket-pruned term lookups with no Spark job, and the compaction
+    fold back to one row per term."""
     from pyspark.sql import functions as F
 
     from bdt_enwikisearch_hadoop_spark.functions.index_store import (
@@ -5759,10 +6030,9 @@ def test_tf_segment_index_serves_current_weights(spark, sf_dir, tmp_path):
             _tf_segment(delta).write.mode("append")
             .bucketBy(nb, "term").sortBy("term").saveAsTable("t_seg_tf")
         )
-        q = search_tf_index(spark, "t_seg_tf", QUERY_TERMS)
-        assert rows(q) == rows(search_index(spark, "t_seg_w", QUERY_TERMS))
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in plan, plan
+        assert _assert_search_reads_pruned(
+            spark, "t_seg_tf", QUERY_TERMS
+        ) == rows(search_index(spark, "t_seg_w", QUERY_TERMS))
         # ... and a replayed segment carrying a CONFLICTING (lower) tf
         # for already-ingested doc_ids — a producer that re-sent a
         # document with different text: max(tf) keeps the ingested tf
